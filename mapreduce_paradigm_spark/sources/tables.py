@@ -5,11 +5,24 @@ The reference's only sources are a manifest + raw text files
 scans, which at 100 TB are the real input path: Spark's vectorized parquet
 reader plus Catalyst predicate pushdown / column pruning do the heavy
 lifting as long as plans stay declarative.
+
+Schema memo: a parquet read without a schema runs one Spark job to infer it
+from the footers, a round that computes nothing. ``_read_parquet`` keeps the
+inferred schema per path and passes it to every later read, so repeat loads
+submit no job. Only schemas are cached, never data (what a metastore keeps).
+An entry is inferred again on the first read after any file under the path
+changes (name, size or mtime_ns) or after a conf that changes inference
+(``_SCHEMA_CONFS``) changes. Paths ``os.stat`` cannot see, such as non-local
+URIs, are not memoized and are read exactly as without it.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -29,12 +42,63 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+# session confs that change what parquet schema inference returns
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# (path, conf values) -> (file fingerprint, inferred schema)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """Sorted (file, size, mtime_ns) of every file under a local path; None
+    when ``os.stat`` cannot see the path."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((path, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for n in names:
+                f = os.path.join(root, n)
+                st = os.stat(f)
+                files.append((f, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized (see the
+    module docstring): only the first read of an unchanged path infers."""
+    fp = _fingerprint(path)
+    if fp is None:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    with _SCHEMAS_LOCK:
+        hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    # infer outside the lock: concurrent first reads may both infer, and
+    # the last one stores the same schema
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Keep filters/projections on top of this so Catalyst
     pushes them into the parquet scan (check ``PushedFilters`` in explain)."""
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,13 +118,25 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     31 days vs the oracle's 30. Defense in depth: the session default pins
     the conf true (session.py), this loader re-pins it immediately before
     the read, and the type is ASSERTED after the read so any future
-    resolution drift is a loud TypeError instead of silent parity skew."""
+    resolution drift is a loud TypeError instead of silent parity skew.
+    Both run on every call, memoized schema or not; the streaming events
+    source shares them (``_read_events_raw``, ``_events_ts_ntz``)."""
+    return _events_ts_ntz(_read_events_raw(spark, sf_dir))
+
+
+def _read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as stored, with the two inference confs pinned."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    return _read_parquet(spark, table_path(sf_dir, "events"))
+
+
+def _events_ts_ntz(raw: DataFrame) -> DataFrame:
+    """Rebuild raw int64 nanos as TIMESTAMP_NTZ micros, then assert that
+    ``ts`` is TIMESTAMP_NTZ (batch or streaming frame)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
     if isinstance(raw.schema["ts"].dataType, LongType):
         raw = raw.withColumn(
             "ts",

@@ -22,40 +22,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_paradigm_spark.functions import doc_words
-from mapreduce_paradigm_spark.sources.tables import load_table, table_path
+from mapreduce_paradigm_spark.sources.tables import (
+    _events_ts_ntz,
+    _read_events_raw,
+    load_table,
+)
 
 
 def _stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """File-source stream over one parquet table (schema from a batch read;
-    events' ns→NTZ conversion reused from the batch loader)."""
-    # file-stream sources take a directory; scope to one table via glob
+    """File-source stream over one parquet table. The schema comes from the
+    batch loader's memo; events also takes its conf pins, ns→NTZ rebuild and
+    NTZ assertion (``sources.tables._load_events``)."""
     if name == "events":
-        from pyspark.sql.types import LongType
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(table_path(sf_dir, name)).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", f"{name}.parquet")
-            .parquet(sf_dir)
-        )
-        # same guard as the batch loader: only repair when ts really came
-        # back as raw int64 nanos (fixtures written at µs precision load as
-        # TIMESTAMP_NTZ directly and need no rebuild)
-        if isinstance(schema["ts"].dataType, LongType):
-            raw = raw.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        return raw
-    schema = load_table(spark, sf_dir, name).schema
-    return (
+        schema = _read_events_raw(spark, sf_dir).schema
+    else:
+        schema = load_table(spark, sf_dir, name).schema
+    # file-stream sources take a directory; scope to one table via glob
+    raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
+    return _events_ts_ntz(raw) if name == "events" else raw
 
 
 def run_to_memory(

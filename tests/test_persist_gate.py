@@ -16,6 +16,7 @@ from .conftest import SF_CORRECT
 
 
 def test_gate_closed_below_floor(spark):
+    dd.release_caches()  # _PENDING is process-global; start from empty
     docs = load_table(spark, SF_CORRECT, "documents")
     out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
     assert not out.is_cached  # fixture inputs are KBs, floor is 256 MiB

@@ -371,22 +371,121 @@ def test_events_ts_pinned_ntz_under_adversarial_conf(spark):
     session-zone LTZ and day derivations shift near UTC midnight under
     non-UTC sessions (events_compaction_plan: 31 days vs the oracle's 30,
     reproduced deterministically). The loader must re-pin the conf and
-    surface NTZ even when the shared session has been flipped."""
+    surface NTZ even when the shared session has been flipped — the batch
+    loader and the streaming events source alike."""
     from pyspark.sql.types import TimestampNTZType
 
     from mapreduce_paradigm_spark.sources.tables import load_table
+    from mapreduce_paradigm_spark.streaming import _stream_table
 
     from .conftest import SF_SMOKE
 
     old = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     try:
-        e = load_table(spark, SF_SMOKE, "events")
-        assert isinstance(e.schema["ts"].dataType, TimestampNTZType)
-        # the loader itself restored the pin for everything downstream
-        assert (
-            spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
-            == "true"
-        )
+        for load in (load_table, _stream_table):
+            spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+            e = load(spark, SF_SMOKE, "events")
+            assert isinstance(e.schema["ts"].dataType, TimestampNTZType), load
+            # the loader itself restored the pin for everything downstream
+            assert (
+                spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+                == "true"
+            )
     finally:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", old)
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs that ``fn()`` submits, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_memo_second_load_submits_no_job(spark):
+    from mapreduce_paradigm_spark.sources import tables
+
+    for name in ("lineitem", "events"):
+        with tables._SCHEMAS_LOCK:
+            tables._SCHEMAS.clear()
+        loads = []
+        first = _jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
+        assert first >= 1, name  # the counter sees the inference job
+        again = _jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
+        assert again == 0, name
+        assert loads[0].schema == loads[1].schema
+
+
+def test_schema_memo_concurrent_loads(spark):
+    """Loads on concurrent threads share the memo: every load
+    returns the inferred schema and the memo ends with one entry per
+    table."""
+    import sys
+    import threading
+
+    from mapreduce_paradigm_spark.sources import tables
+
+    names = ("lineitem", "orders", "customer", "events")
+    want = {n: load_table(spark, SF_SMOKE, n).schema for n in names}
+    with tables._SCHEMAS_LOCK:
+        tables._SCHEMAS.clear()
+    got, errors = [], []
+
+    def worker(i: int) -> None:
+        try:
+            for k in range(len(names)):
+                n = names[(i + k) % len(names)]
+                got.append((n, load_table(spark, SF_SMOKE, n).schema))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) == 12 * len(names)
+    assert all(schema == want[n] for n, schema in got)
+    paths = sorted(path for path, _confs in tables._SCHEMAS)
+    assert paths == sorted(tables.table_path(SF_SMOKE, n) for n in names)
+
+
+def test_schema_memo_rereads_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_paradigm_spark.sources.tables import _read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert _read_parquet(spark, path).columns == ["a"]
+    assert _read_parquet(spark, path).columns == ["a"]  # memo hit
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = _read_parquet(spark, path)
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_revenue_by_region_builder_rebuild_submits_no_job(spark):
+    """A 5-table query rebuilt on unchanged inputs runs no schema
+    inference, so nothing reaches the cluster before the caller's action."""
+    from mapreduce_paradigm_spark.registry import all_specs
+
+    build = all_specs()["revenue_by_region"].builder
+    build(spark, SF_SMOKE)
+    assert _jobs_submitted(spark, lambda: build(spark, SF_SMOKE)) == 0
