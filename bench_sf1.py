@@ -168,6 +168,7 @@ def main() -> None:
     from mapreduce_paradigm_spark.operators.components import (
         connected_components_star,
     )
+    from mapreduce_paradigm_spark.lifetime import release_caches
     from mapreduce_paradigm_spark.operators.dedup import (
         embedding_lsh_stats,
         embedding_near_dup_lsh,
@@ -176,7 +177,6 @@ def main() -> None:
         lsh_params,
         minhash_lsh_pairs,
         minhash_lsh_stats,
-        release_caches,
         semantic_cluster_near_dups,
         semdedup_stats,
         simhash_near_pairs,

@@ -57,6 +57,12 @@ def connected_components(
     Spark would return NULL and NULL == NULL would declare convergence
     after round 1, silently splitting components — so those fall back to a
     changed-label count join per round (same scalar-only driver contract).
+
+    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
+    executor fails the next action on the result instead of recomputing
+    it. The final round's checkpoint blocks are not released when the
+    result is dropped; the ContextCleaner reaps them later (at sf0.01, 2
+    persisted RDDs remain after ``dedup_clusters``' result is dropped).
     """
     from pyspark.sql.types import NumericType
 
@@ -165,6 +171,13 @@ def connected_components_star(
     smaller ids; the fixpoint is a star forest whose centers are the
     component minima — read labels straight off the final edges. The
     convergence action per round is one scalar (edge-set change count).
+
+    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
+    executor fails the next action on the result instead of recomputing
+    it. The final round's checkpoint blocks are not released when the
+    result is dropped; the ContextCleaner reaps them later (at sf0.01, 5
+    more persisted RDDs remain after ``dedup_clusters_star``' result is
+    dropped).
     """
     # localCheckpoint (not persist) the input projection: it feeds BOTH the
     # canonical edge set and the final vertex list, so without it an
@@ -295,6 +308,11 @@ def kcore_vertices(
     ``ConvergenceError`` rather than returning a non-core silently.
     ``localCheckpoint`` per round keeps the logical plan flat (same
     rationale as ``connected_components``).
+
+    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
+    executor fails the next action on the result instead of recomputing
+    it. The final round's checkpoint blocks are not released when the
+    result is dropped; the ContextCleaner reaps them later.
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -369,6 +387,11 @@ def strongly_connected_components(
     Per-round localCheckpoint flattens lineage exactly as the CC loops
     do. Raises ``ConvergenceError`` on any unconverged inner fixpoint or
     leftover vertices, never returning a silently wrong labeling.
+
+    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
+    executor fails the next action on the result instead of recomputing
+    it. The final round's checkpoint blocks are not released when the
+    result is dropped; the ContextCleaner reaps them later.
     """
     v0 = vertices.columns[0]
     remaining = vertices.select(F.col(v0).alias("node")).distinct()

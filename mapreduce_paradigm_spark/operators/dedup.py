@@ -17,13 +17,13 @@ from __future__ import annotations
 
 import logging
 import math
-import threading
 import warnings
-import weakref
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from mapreduce_paradigm_spark import lifetime
 
 # in-array unordered pair combinations of a sorted id list ``ds`` — the
 # no-self-join bucket-explode shared by the MinHash banding, its stats
@@ -138,135 +138,7 @@ def _bands_for_recall(p: float, nbits: int, target_recall: float) -> float:
     return max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p1)))
 
 
-# --- cache discipline --------------------------------------------------------
-
-# df.persist() entries live in the SQL CacheManager until explicitly
-# unpersisted (the ContextCleaner does NOT reap them on GC), so a long-lived
-# session issuing repeated dedup calls would accumulate cached blocks
-# without bound. Discipline: operators persist intermediates through
-# _tracked_persist and, at their return site, transfer them via _scoped()
-# to a weakref finalizer on the RETURNED DataFrame — the persisted blocks
-# live exactly as long as the plan they back, and are unpersisted when the
-# caller drops the result. (An earlier revision swept a module-global list
-# on every builder entry, which silently invalidated the caches behind a
-# previously built but not-yet-executed plan; scoping fixes that.)
-# Interleaved builder calls from concurrent threads may attribute an
-# intermediate to the other call's scope — harmless (worst case a delayed
-# release or an early recompute), never a wrong result.
-
-_CACHE_LOCK = threading.RLock()
-_PENDING: list[DataFrame] = []  # persists made by the builder call in progress
-_PENDING_BC: list = []  # sc.broadcast handles made by the call in progress
-_FINALIZERS: list[weakref.finalize] = []  # live scopes, for eager release
-
-# Builder-level scope (round 13). The per-operator _scoped finalizer has a
-# sharp edge: a call chain like `_tracked_persist(op(...).select("d1","d2"))`
-# drops the operator's returned frame IMMEDIATELY (it is an unnamed
-# temporary), so its finalizer fires and unpersists the operator's INTERNAL
-# caches before any consumer ever reads them — the downstream plans then
-# silently degrade to raw re-scans (round-13 audit: minhash_lsh_recall_check
-# planned 12 document scans where the fully-scoped plan needs 1). Fix:
-# registry-registered builders run inside a scope (see registry.register);
-# while a scope is active, _scoped ALSO pins the intermediate result into
-# _PENDING_KEEPALIVE, and the scope's exit transfers those strong
-# references into the FINAL result's finalizer — so every operator-internal
-# cache lives exactly as long as the returned plan, however the builder
-# derived it. Direct operator calls (tests, library use) see depth 0 and
-# keep the old per-result behavior.
-_SCOPE_DEPTH = 0
-_PENDING_KEEPALIVE: list[DataFrame] = []
-
-
-def _scope_begin() -> None:
-    global _SCOPE_DEPTH
-    with _CACHE_LOCK:
-        _SCOPE_DEPTH += 1
-
-
-def _scope_end(result):
-    """Close the current builder scope. At the outermost exit, adopt every
-    leftover pending persist/broadcast AND every intermediate _scoped frame
-    (strong refs) into ``result``'s finalizer; at nested exits, pin
-    ``result`` itself for the enclosing scope. ``result=None`` (builder
-    raised) releases nothing extra — the intermediates' own finalizers
-    still fire on GC exactly as before."""
-    global _SCOPE_DEPTH
-    with _CACHE_LOCK:
-        _SCOPE_DEPTH = max(0, _SCOPE_DEPTH - 1)
-        if _SCOPE_DEPTH > 0:
-            if result is not None:
-                _PENDING_KEEPALIVE.append(result)
-            return result
-        keep, _PENDING_KEEPALIVE[:] = list(_PENDING_KEEPALIVE), []
-        mine, _PENDING[:] = list(_PENDING), []
-        mine_bc, _PENDING_BC[:] = list(_PENDING_BC), []
-        if result is None:
-            # builder failed: release the orphaned pendings now; keepalives
-            # just drop (their own finalizers own their caches)
-            _release_handles([d._jdf for d in mine], mine_bc)
-            return result
-        keep = [k for k in keep if k is not result]  # no self-reference
-        if keep or mine or mine_bc:
-            fin = weakref.finalize(
-                result,
-                _release_handles,
-                [d._jdf for d in mine],
-                mine_bc,
-                keep,  # strong refs: intermediates outlive derived plans
-            )
-            fin.atexit = False
-            _FINALIZERS.append(fin)
-            _FINALIZERS[:] = [f for f in _FINALIZERS if f.alive]
-    return result
-
-
-def _release_handles(jdfs, bcs=(), keep=()) -> None:
-    # ``keep`` is not released here — it exists purely so the finalizer
-    # closure holds strong references to intermediate _scoped frames;
-    # dropping them after this call lets THEIR finalizers cascade.
-    for j in jdfs:
-        try:
-            j.unpersist(False)
-        except Exception:
-            pass  # session stopped / gateway down — nothing left to free
-    for b in bcs:
-        # unpersist, NEVER destroy: a derived plan that outlives the scoped
-        # result still references the broadcast, and Spark transparently
-        # re-ships an unpersisted broadcast on next use — so this frees the
-        # executor blocks without making any plan unrunnable (round-13,
-        # the r12 advisor's broadcast-leak item)
-        try:
-            b.unpersist(False)
-        except Exception:
-            pass
-
-
-# back-compat alias (the docstrings and older scopes reference this name)
-_release_jdfs = _release_handles
-
-
-def release_caches() -> None:
-    """Eagerly unpersist every intermediate cached by live dedup-family
-    plans (benchmark/test hygiene). Normally unnecessary: each plan's
-    caches are released automatically when its result DataFrame is
-    garbage-collected. Cost of an early release is only recompute (and a
-    re-shipped broadcast on next use)."""
-    with _CACHE_LOCK:
-        fins, _FINALIZERS[:] = list(_FINALIZERS), []
-        pend, _PENDING[:] = list(_PENDING), []
-        bcs, _PENDING_BC[:] = list(_PENDING_BC), []
-        _PENDING_KEEPALIVE[:] = []
-    for f in fins:
-        f()  # idempotent; runs _release_handles for that scope
-    _release_handles([d._jdf for d in pend], bcs)
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    with _CACHE_LOCK:
-        _PENDING.append(df)
-    return df
-
+# --- size-gated persist ------------------------------------------------------
 
 # input-size floor for the size-gated persist (round 13, VERDICT r12 ask
 # #4): the r12 multi-consumer persists were a real plan win (one scan
@@ -310,7 +182,7 @@ def _input_bytes_ge(src: DataFrame, floor_bytes: int | None = None) -> bool:
 def _persist_if_input_ge(
     df: DataFrame, src: DataFrame, floor_bytes: int | None = None
 ) -> DataFrame:
-    """``_tracked_persist(df)`` when ``src``'s scan inputs total at least
+    """``lifetime.persist(df)`` when ``src``'s scan inputs total at least
     ``floor_bytes`` — otherwise ``df`` unchanged. Size-gates the
     multi-consumer persists whose only value is avoiding re-SCANS of
     ``src``: below the floor the re-scan is cheaper than the cache build
@@ -319,44 +191,8 @@ def _persist_if_input_ge(
     (object stores: size not statable from the driver) persist
     conservatively; sourceless frames (in-memory test fixtures) do not."""
     if _input_bytes_ge(src, floor_bytes):
-        return _tracked_persist(df)
+        return lifetime.persist(df)
     return df
-
-
-def _tracked_broadcast(bc):
-    """Register a ``sc.broadcast`` handle with the in-progress call's scope
-    so ``_scoped`` frees its executor blocks (unpersist, not destroy) when
-    the result plan is garbage-collected — the same lifetime discipline as
-    ``_tracked_persist`` (round-13; closes the r12 advisor's never-released
-    broadcast item)."""
-    with _CACHE_LOCK:
-        _PENDING_BC.append(bc)
-    return bc
-
-
-def _scoped(result: DataFrame) -> DataFrame:
-    """Adopt the in-progress call's persisted intermediates and broadcasts
-    into ``result``'s lifetime: a weakref finalizer unpersists them (via
-    their JVM handles, which the closure keeps alive) when ``result`` is
-    garbage-collected. Inside a builder scope (round 13), ``result`` is
-    additionally pinned until the builder's FINAL result dies, so caches
-    survive derivation chains like ``op(...).select(...)`` (see
-    _scope_begin/_scope_end)."""
-    with _CACHE_LOCK:
-        mine, _PENDING[:] = list(_PENDING), []
-        mine_bc, _PENDING_BC[:] = list(_PENDING_BC), []
-        if mine or mine_bc:
-            fin = weakref.finalize(
-                result, _release_handles, [d._jdf for d in mine], mine_bc
-            )
-            # at interpreter exit the JVM is tearing down anyway — don't
-            # race it from the atexit hook
-            fin.atexit = False
-            _FINALIZERS.append(fin)
-            _FINALIZERS[:] = [f for f in _FINALIZERS if f.alive]
-        if _SCOPE_DEPTH > 0:
-            _PENDING_KEEPALIVE.append(result)
-    return result
 
 
 # --- normalization -----------------------------------------------------------
@@ -494,6 +330,7 @@ def _pairs_from_postings(postings: DataFrame) -> DataFrame:
     )
 
 
+@lifetime.scoped
 def jaccard_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -516,14 +353,14 @@ def jaccard_pairs(
         postings = postings.filter(F.col("df") <= max_shingle_df)
     # feeds two branches (sizes + pairs): persist instead of recomputing the
     # corpus scan + shuffle per branch. MEMORY_AND_DISK → spills, never OOMs.
-    postings = _tracked_persist(postings)
+    postings = lifetime.persist(postings)
     # sizes itself feeds BOTH join sides (s1, s2) under different aliases —
     # Catalyst plans them as independent subtrees, so without its own
     # persist the postings explode + per-doc count (a full Σ df-element
     # pass + exchange) runs TWICE (round-12 before-plan: two identical
     # HashAggregate+Exchange chains over the postings cache). One row per
     # doc, spill-safe.
-    sizes = _tracked_persist(
+    sizes = lifetime.persist(
         postings.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("sz"))
@@ -532,7 +369,7 @@ def jaccard_pairs(
     s1 = sizes.alias("s1")
     s2 = sizes.alias("s2")
     jac = F.col("n_common") / (F.col("s1.sz") + F.col("s2.sz") - F.col("n_common"))
-    return _scoped(
+    return (
         common.join(s1, F.col("d1") == F.col("s1.doc_id"))
         .join(s2, F.col("d2") == F.col("s2.doc_id"))
         .filter(jac >= threshold)
@@ -540,6 +377,7 @@ def jaccard_pairs(
     )
 
 
+@lifetime.scoped
 def delta_jaccard_pairs(
     docs: DataFrame,
     is_new,
@@ -571,11 +409,11 @@ def delta_jaccard_pairs(
     shingle of any reported pair. Same df-cap semantics as
     ``jaccard_pairs``.
     """
-    shingles = _tracked_persist(hashed_shingles(docs, k, text_col))
+    shingles = lifetime.persist(hashed_shingles(docs, k, text_col))
     postings = shingle_postings(docs, k, text_col, shingles=shingles)
     if max_shingle_df is not None:
         postings = postings.filter(F.col("df") <= max_shingle_df)
-    postings = _tracked_persist(postings)
+    postings = lifetime.persist(postings)
     new_sids = shingles.filter(is_new(F.col("doc_id"))).select("sid").distinct()
     touched = postings.join(new_sids, "sid", "left_semi")
     common = (
@@ -587,7 +425,7 @@ def delta_jaccard_pairs(
     )
     # persisted: consumed by both join sides (same double-compute hazard as
     # jaccard_pairs' sizes — see the comment there)
-    sizes = _tracked_persist(
+    sizes = lifetime.persist(
         postings.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("sz"))
@@ -595,7 +433,7 @@ def delta_jaccard_pairs(
     s1 = sizes.alias("s1")
     s2 = sizes.alias("s2")
     jac = F.col("n_common") / (F.col("s1.sz") + F.col("s2.sz") - F.col("n_common"))
-    return _scoped(
+    return (
         common.join(s1, F.col("d1") == F.col("s1.doc_id"))
         .join(s2, F.col("d2") == F.col("s2.doc_id"))
         .filter(jac >= threshold)
@@ -747,6 +585,7 @@ def _minhash_band_hashes(
     return sig, stacked
 
 
+@lifetime.scoped
 def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -775,7 +614,7 @@ def minhash_lsh_pairs(
     # ONE corpus scan: the hashed shingle stream feeds both the signature
     # path (candidates) and the postings path (verify); persisted because
     # the two subtrees materialize independently.
-    sh = _tracked_persist(hashed_shingles(docs, k, text_col))
+    sh = lifetime.persist(hashed_shingles(docs, k, text_col))
     _, stacked = _minhash_band_hashes(docs, k, num_hashes, bands, text_col, sh)
     # candidates per bucket WITHOUT a self-join: group each (band, hash)
     # bucket into a sorted doc list, explode in-array combinations —
@@ -794,7 +633,7 @@ def minhash_lsh_pairs(
     # two equi-joins of the candidate pairs (small by LSH construction)
     # against the docsets, then one in-array intersection per candidate —
     # never the Σ df² postings pair explosion (see docstring)
-    docsets = _tracked_persist(
+    docsets = lifetime.persist(
         sh.groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("sid")).alias("sids"))
         .withColumn("sz", F.size("sids"))
@@ -817,7 +656,7 @@ def minhash_lsh_pairs(
         )
     )
     jac = F.col("n_common") / (F.col("sz1") + F.col("sz2") - F.col("n_common"))
-    return _scoped(verified.filter(jac >= threshold).select("d1", "d2", jac.alias("jaccard")))
+    return verified.filter(jac >= threshold).select("d1", "d2", jac.alias("jaccard"))
 
 
 def minhash_lsh_stats(
@@ -842,10 +681,10 @@ def minhash_lsh_stats(
     signature/band pipeline is SHARED with the operator
     (``_minhash_band_hashes``), so the two cannot drift apart.
     """
-    # plain persist (not _tracked_persist): this helper returns a dict, so
-    # there is no result DataFrame for _scoped() to hand the cache to — it
-    # is unpersisted in the finally (an OOM mid-count must not leak a
-    # corpus-scale cache that release_caches() can't see)
+    # plain persist (not lifetime.persist): the counts are taken eagerly,
+    # so the caches are unpersisted in the finally as soon as they are
+    # done, even when called inside a builder's scope (an OOM mid-count
+    # must not leak a corpus-scale cache either)
     sh = hashed_shingles(docs, k, text_col).persist()
     sig = stacked = None
     try:
@@ -897,6 +736,7 @@ def minhash_lsh_stats(
 # --- embedding-cosine near-dup ----------------------------------------------
 
 
+@lifetime.scoped
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -966,7 +806,7 @@ def embedding_near_dup_pairs(
             if rows
             else np.zeros((0, 0))
         )
-        bcs.append(_tracked_broadcast(spark.sparkContext.broadcast((ids, mat))))
+        bcs.append(lifetime.broadcast(spark.sparkContext.broadcast((ids, mat))))
         del rows  # driver holds one chunk's rows at a time
 
     def score(batches):
@@ -1265,7 +1105,7 @@ def _derive_lsh_params(
                 f"derives nbits too small and candidate counts grow as "
                 f"n²/2^nbits (pass the real size, or omit corpus_size)",
                 UserWarning,
-                stacklevel=3,
+                stacklevel=4,
             )
             n_corpus = emb.count()
         else:
@@ -1315,7 +1155,7 @@ def _sign_band_signatures(
     planes = np.vstack(
         [np.random.RandomState(seed + b).standard_normal((nbits, dim)) for b in range(bands)]
     )  # (bands*nbits, dim)
-    bp = _tracked_broadcast(emb.sparkSession.sparkContext.broadcast(planes))
+    bp = lifetime.broadcast(emb.sparkSession.sparkContext.broadcast(planes))
     weights = 1 << np.arange(nbits, dtype=np.int64)
 
     def sign_buckets(batches):
@@ -1345,6 +1185,7 @@ def _sign_band_signatures(
     return base.mapInPandas(sign_buckets, schema="id BIGINT, band INT, bucket BIGINT")
 
 
+@lifetime.scoped
 def embedding_lsh_stats(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -1478,7 +1319,7 @@ def _numpy_exact_rerank(
     for i in range(1, mat_s.shape[1]):
         nrm = nrm + mat_s[:, i] * mat_s[:, i]
     nrm = np.sqrt(nrm)
-    bc = _tracked_broadcast(
+    bc = lifetime.broadcast(
         spark.sparkContext.broadcast((ids_s, mat_s, nrm))
     )
 
@@ -1644,7 +1485,7 @@ def _quantized_exact_rerank(
                 f"pass the real size (or omit corpus_size for an eager "
                 f"count) to re-enable the broadcast regimes",
                 UserWarning,
-                stacklevel=3,
+                stacklevel=4,
             )
             bcast_codes = bcast_vec = False
     if bcast_vec:
@@ -1781,6 +1622,7 @@ def _quantized_exact_rerank(
     )
 
 
+@lifetime.scoped
 def embedding_near_dup_lsh(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -1903,7 +1745,7 @@ def embedding_near_dup_lsh(
                 f"{budget} — achieved recall at the threshold is "
                 f"~{achieved:.4f}",
                 UserWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
         bands = int(min(budget, want))
 
@@ -2093,6 +1935,7 @@ def simhash_params(
     return {"n_blocks": best}
 
 
+@lifetime.scoped
 def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -2158,7 +2001,7 @@ def simhash_near_pairs(
         )
     # fingerprints feed C(n_blocks, d) bucket branches: persist the (tiny)
     # result rather than recomputing the 63-aggregate pipeline per table
-    sh = _tracked_persist(simhash(docs, text_col))
+    sh = lifetime.persist(simhash(docs, text_col))
     blocks = _simhash_blocks(n_blocks)
     # bucket per subset key, pairs by in-array combination explode (the
     # same no-self-join shape as the shingle/band pair generation); the
@@ -2201,7 +2044,7 @@ def simhash_near_pairs(
     if max_chunk_df is not None:
         # grouped feeds TWO branches (normal buckets + megabucket routing),
         # so the chunk-key explode + bucket aggregation executes once per
-        # branch. A _tracked_persist(grouped) was tried in round 12 and
+        # branch. A lifetime.persist(grouped) was tried in round 12 and
         # REVERTED on measurement: building the cache (row-format
         # serialization of the array-of-struct bucket lists) cost more at
         # bench scale than the duplicated codegen aggregation it saved
@@ -2254,7 +2097,7 @@ def simhash_near_pairs(
     # and the emitted set is identical; the distinct key (d1, d2, hamming)
     # dedups exactly as (d1, d2, h1, h2) did — a pair's fingerprints are
     # fixed, so duplicates across subset tables collapse the same way.
-    return _scoped(
+    return (
         pairs.withColumn(
             "hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
         )
@@ -2468,7 +2311,7 @@ def _semantic_cluster_assignments(
             f"(embedding_near_dup_pairs) if NaN-propagating semantics "
             f"matter",
             UserWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
         # cheap predicate over already-materialized checkpoint blocks —
         # every downstream consumer (seed pick, Lloyd, assignment, both
@@ -2481,7 +2324,7 @@ def _semantic_cluster_assignments(
             f"nlist/two_level/join-regime derive from the counted size — "
             f"the claim is reported in semdedup_stats but never trusted",
             UserWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
     if nlist is None:
         # scale-aware default (see docstring). ceil via negative floor-div.
@@ -2505,7 +2348,7 @@ def _semantic_cluster_assignments(
                 f"measured wall past n≈720k), or two_level=True to "
                 f"silence this derivation notice.",
                 UserWarning,
-                stacklevel=3,
+                stacklevel=4,
             )
     if (
         train_sample_size is None
@@ -2540,7 +2383,7 @@ def _semantic_cluster_assignments(
                 f"training, or an explicit value to silence this "
                 f"derivation notice.",
                 UserWarning,
-                stacklevel=3,
+                stacklevel=4,
             )
     inv = 1.0 / F.col("n")
     norm = base.select(
@@ -2714,6 +2557,7 @@ def _semantic_cluster_assignments(
     )
 
 
+@lifetime.scoped
 def semdedup_stats(
     emb: DataFrame,
     nlist: int | None = None,
@@ -2813,6 +2657,7 @@ def semdedup_stats(
     return out
 
 
+@lifetime.scoped
 def semantic_cluster_near_dups(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -2961,7 +2806,7 @@ def semantic_cluster_near_dups(
     # emitted pairs and values are bit-identical to the unquantized verify
     # (see _quantized_exact_rerank; candidates already distinct — no output
     # dedup needed). Reads the checkpointed base, not the source.
-    return _scoped(
+    return (
         # corpus_size here is ALWAYS the counted non-NULL base size
         # (round 11: caller claims are cross-checked, never trusted), so
         # the rerank's join regime is always picked from the real n
@@ -2971,6 +2816,7 @@ def semantic_cluster_near_dups(
     )
 
 
+@lifetime.scoped
 def jaccard_pairs_prefix_filter(
     docs: DataFrame,
     k: int = 3,
@@ -3002,7 +2848,7 @@ def jaccard_pairs_prefix_filter(
     # ONE grouped pass gives both shingle df AND the posting lists; per-doc
     # ranked sets are rebuilt from the postings explode — no (doc, shingle)
     # × df join, one fewer full-stream shuffle than the naive 4-stage plan.
-    postings = _tracked_persist(shingle_postings(docs, k, text_col))
+    postings = lifetime.persist(shingle_postings(docs, k, text_col))
     docsets = (
         postings.select("sid", "df", F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
@@ -3018,7 +2864,7 @@ def jaccard_pairs_prefix_filter(
             F.expr("transform(ranked, s -> s.sid)").alias("sids"),
         )
     )
-    docsets = _tracked_persist(docsets)
+    docsets = lifetime.persist(docsets)
     plen = (
         F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + F.lit(1)
     ).cast("int")
@@ -3109,7 +2955,7 @@ def jaccard_pairs_prefix_filter(
     length_ok = (
         F.col("s1") * F.lit(t_den) >= F.lit(t_num) * F.col("s2")
     ) & (F.col("s2") * F.lit(t_den) >= F.lit(t_num) * F.col("s1"))
-    return _scoped(
+    return (
         cand.join(a, "d1")
         .join(b, "d2")
         .filter(length_ok)
@@ -3118,6 +2964,7 @@ def jaccard_pairs_prefix_filter(
     )
 
 
+@lifetime.scoped
 def containment_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -3141,10 +2988,10 @@ def containment_pairs(
     postings = shingle_postings(docs, k, text_col)
     if max_shingle_df is not None:
         postings = postings.filter(F.col("df") <= max_shingle_df)
-    postings = _tracked_persist(postings)
+    postings = lifetime.persist(postings)
     # persisted: consumed by both join sides (same double-compute hazard as
     # jaccard_pairs' sizes — see the comment there)
-    sizes = _tracked_persist(
+    sizes = lifetime.persist(
         postings.select(F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("sz"))
@@ -3179,7 +3026,7 @@ def containment_pairs(
             c21.alias("containment"),
         ),
     )
-    return _scoped(
+    return (
         both.select(F.explode(directed).alias("e"))
         .select("e.src", "e.dst", "e.src_sz", "e.dst_sz", "e.containment")
         .filter(F.col("containment") >= threshold)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dot_product
 
 # Centroid-block width for the Lloyd scoring pass (round 11): scoring a
@@ -134,10 +135,16 @@ class AnnSharedState:
     computation each tier performs for itself — same collect, same
     lowest-xxhash64 sample, same unit normalization, same bucket
     expressions — so tier outputs are BIT-IDENTICAL with or without the
-    shared state (pinned in tests/test_similarity_shared.py). Corpus-side
-    frames are persisted through the dedup cache discipline
-    (``_tracked_persist``), so their lifetime is adopted by the caller's
-    ``_scoped()`` result like every other plan-scoped cache.
+    shared state (pinned in tests/test_similarity_shared.py).
+
+    Corpus-side frames are persisted into the cache scope that was open
+    when the state was constructed (see ``lifetime``): inside a builder
+    they live as long as the builder's result. Built outside any scope,
+    the state owns them itself; use it as a context manager, whose exit
+    releases them::
+
+        with AnnSharedState(corpus, queries) as sh:
+            rows = topk_cosine(corpus, queries, shared=sh).collect()
 
     Reuse across a DIFFERENT corpus/queries/column set is a caller bug and
     raises — the state is keyed by object identity, the only equality this
@@ -156,6 +163,19 @@ class AnnSharedState:
         self._samples: dict = {}
         self._unit = None
         self._lsh: dict = {}
+        # the scope open at construction owns the persisted corpus frames;
+        # with none open, the state owns them until __exit__
+        scope = lifetime._SCOPE.get()
+        self._owns_scope = scope is None
+        self._scope = [] if scope is None else scope
+
+    def __enter__(self) -> "AnnSharedState":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        if self._owns_scope:
+            lifetime._release(self._scope)
+            self._unit, self._lsh = None, {}
 
     def _check(self, corpus, queries, id_col, emb_col, need_queries=True):
         if (
@@ -194,11 +214,8 @@ class AnnSharedState:
         ``(neighbor_id, emb_d)`` — every tier's scan pass reads the cache
         instead of re-scanning + re-normalizing the source."""
         if self._unit is None:
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _tracked_persist,
-            )
-
-            self._unit = _tracked_persist(
+            self._unit = lifetime._persist(
+                self._scope,
                 _unit_normalized(self.corpus, self.emb_col).select(
                     F.col(self.id_col).alias("neighbor_id"), F.col("emb_d")
                 )
@@ -212,12 +229,10 @@ class AnnSharedState:
         key = (dim, nbits, seed)
         if key not in self._lsh:
             from mapreduce_paradigm_spark.functions import l2_norm
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _tracked_persist,
-            )
 
             inv = 1.0 / l2_norm(F.col("emb_d"))
-            self._lsh[key] = _tracked_persist(
+            self._lsh[key] = lifetime._persist(
+                self._scope,
                 hyperplane_buckets(self.corpus, dim, nbits, seed, self.emb_col)
                 .withColumn(
                     "emb_d", F.transform(F.col("emb_d"), lambda x: x * inv)
@@ -231,6 +246,7 @@ class AnnSharedState:
         return self._lsh[key]
 
 
+@lifetime.scoped
 def topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -275,7 +291,8 @@ def topk_cosine(
 
     ``shared`` reuses an :class:`AnnSharedState` (one query collect + one
     persisted normalized corpus across several tiers — bit-identical
-    outputs, pinned in pytest).
+    outputs, pinned in pytest). Past the chunk bound the chunked collect
+    still runs and ``shared`` supplies only the corpus.
     """
     import numpy as np
 
@@ -291,9 +308,7 @@ def topk_cosine(
     def _chunk_candidates(qrows):
         q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat = np.array([r[1] for r in qrows], dtype=np.float64)  # (nq, dim)
-        from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
-        bq = _tracked_broadcast(spark.sparkContext.broadcast((q_ids, qmat)))
+        bq = lifetime.broadcast(spark.sparkContext.broadcast((q_ids, qmat)))
 
         def local_topk(batches):
             import pandas as pd
@@ -333,9 +348,7 @@ def topk_cosine(
             local_topk, schema="q_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
         )
 
-    if shared is not None:
-        candidates = _chunk_candidates(shared.qrows())
-    elif n_queries is not None and n_queries > _TOPK_QUERY_CHUNK:
+    if n_queries is not None and n_queries > _TOPK_QUERY_CHUNK:
         unit_q = _unit_normalized(queries, emb_col).select(
             F.col(id_col), F.col("emb_d")
         )
@@ -354,6 +367,8 @@ def topk_cosine(
             candidates = spark.createDataFrame(
                 [], "q_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
             )
+    elif shared is not None:
+        candidates = _chunk_candidates(shared.qrows())
     else:
         candidates = _chunk_candidates(
             _unit_normalized(queries, emb_col)
@@ -519,6 +534,7 @@ def _lloyd_refine(c_norm: DataFrame, cmat: "np.ndarray", iters: int) -> "np.ndar
     return cmat
 
 
+@lifetime.scoped
 def ivf_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -549,8 +565,6 @@ def ivf_topk_cosine(
     """
     import numpy as np
 
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
     spark = corpus.sparkSession
     if shared is not None:
         shared._check(corpus, queries, id_col, emb_col)
@@ -575,7 +589,7 @@ def ivf_topk_cosine(
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)  # (nq, dim)
     # per-query probe set: nprobe nearest centroids
     probes = np.argsort(-(qmat @ cmat.T), axis=1)[:, :nprobe]  # (nq, nprobe)
-    bq = _tracked_broadcast(
+    bq = lifetime.broadcast(
         spark.sparkContext.broadcast((q_ids, qmat, cmat, probes))
     )
 
@@ -649,6 +663,7 @@ def _train_pq_codebooks(
     return books
 
 
+@lifetime.scoped
 def pq_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -678,8 +693,6 @@ def pq_topk_cosine(
     exact and only recall is approximate — pinned against the exact tier in
     tests. Rows-only driver check, like the other approximate tiers.
     """
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
     spark = corpus.sparkSession
     if shared is not None:
         shared._check(corpus, queries, id_col, emb_col)
@@ -718,7 +731,7 @@ def pq_topk_cosine(
         [qmat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)], axis=1
     )  # (nq, m, ksub)
     shortlist = k * refine
-    bq = _tracked_broadcast(spark.sparkContext.broadcast((q_ids, lut, books)))
+    bq = lifetime.broadcast(spark.sparkContext.broadcast((q_ids, lut, books)))
 
     def local_adc_topk(batches):
         import pandas as pd
@@ -889,6 +902,7 @@ def pca_project(
     return proj
 
 
+@lifetime.scoped
 def sq8_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -919,8 +933,6 @@ def sq8_topk_cosine(
     only recall is approximate — pinned vs the exact tier in pytest.
     Rows-only driver check, like the other approximate tiers.
     """
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
     spark = corpus.sparkSession
     if shared is not None:
         shared._check(corpus, queries, id_col, emb_col)
@@ -951,7 +963,7 @@ def sq8_topk_cosine(
     q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([r[1] for r in qrows], dtype=np.float64)  # (nq, dim)
     shortlist = k * refine
-    bq = _tracked_broadcast(
+    bq = lifetime.broadcast(
         spark.sparkContext.broadcast((q_ids, qmat, mn, span))
     )
 
@@ -1066,6 +1078,7 @@ def hyperplane_buckets(
     return out
 
 
+@lifetime.scoped
 def lsh_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1148,6 +1161,7 @@ def lsh_topk_cosine(
     )
 
 
+@lifetime.scoped
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dsum
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
@@ -1350,14 +1351,12 @@ FROM scored
     tags=("analytics", "events", "segmentation"),
 )
 def q_user_rfm_segments(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("maxts"))
     # rfm feeds the percentile-bounds aggregate AND the scoring pass —
     # unpersisted, the events scan + per-user rollup ran twice (round-12
     # plan audit). Per-user sized.
-    rfm = _tracked_persist(
+    rfm = lifetime.persist(
         ev.crossJoin(F.broadcast(mx))
         .groupBy("user_id")
         .agg(
@@ -1401,7 +1400,7 @@ def q_user_rfm_segments(spark, sf_dir):
         band("frequency", "fb").cast("long").alias("f_score"),
         band("monetary_micros", "mb").cast("long").alias("m_score"),
     )
-    return _scoped(
+    return (
         scored.select(
             "*",
             F.concat(

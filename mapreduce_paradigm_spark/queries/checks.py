@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -293,10 +293,10 @@ WHERE c / (s1.sz + s2.sz - c) >= 0.5
         # both tier frames feed multiple count/anti-join consumers below —
         # unpersisted, each consumer re-ran the whole pair pipeline
         # (round-12 plan audit; same fix across every *_check builder)
-        true = _tracked_persist(
+        true = lifetime.persist(
             jaccard_pairs(docs, k=3, threshold=0.5).select("d1", "d2")
         )
-        lsh = _tracked_persist(
+        lsh = lifetime.persist(
             minhash_lsh_pairs(
                 docs, k=3, num_hashes=32, bands=8, threshold=0.5
             ).select("d1", "d2")
@@ -308,7 +308,7 @@ WHERE c / (s1.sz + s2.sz - c) >= 0.5
         n_extra = _scalar(
             lsh.join(true, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
         )
-        return _scoped(
+        return (
             n_true.crossJoin(F.broadcast(n_missed))
             .crossJoin(F.broadcast(n_extra))
             .select(
@@ -349,10 +349,10 @@ WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         )
 
         emb = load_table(spark, sf_dir, "embeddings")
-        exact = _tracked_persist(
+        exact = lifetime.persist(
             embedding_near_dup_pairs(emb, threshold=0.42).select("d1", "d2")
         )
-        sem = _tracked_persist(
+        sem = lifetime.persist(
             semantic_cluster_near_dups(emb, threshold=0.42).select("d1", "d2")
         )
         n_exact = _scalar(exact, F.count(F.lit(1)), "n_exact_pairs")
@@ -362,7 +362,7 @@ WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         n_extra = _scalar(
             sem.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
         )
-        return _scoped(
+        return (
             n_exact.crossJoin(F.broadcast(n_missed))
             .crossJoin(F.broadcast(n_extra))
             .select(
@@ -429,17 +429,17 @@ def q_ann_recall_check(spark, sf_dir):
     # the query slice feeds every tier's query side (bucket frames ×2,
     # rerank qvec ×2, the n_queries scalar, the shared collect) — persist
     # the tiny filtered projection so each consumer reads the cache
-    queries = _tracked_persist(emb.filter(F.col("vec_id") % 25 == 0))
+    queries = lifetime.persist(emb.filter(F.col("vec_id") % 25 == 0))
     # shared trained state (round 13; VERDICT r12 ask #3): ONE query-matrix
     # collect, ONE deterministic training-sample pick, ONE persisted
     # unit-normalized corpus — previously each of the 6 tier invocations
     # re-ran its own (12+ driver jobs of pure repetition). Tier outputs are
     # bit-identical with/without sharing (pinned in
-    # tests/test_similarity_shared.py); the persisted frames adopt this
-    # plan's lifetime via _scoped below.
+    # tests/test_similarity_shared.py); the persisted frames belong to
+    # this builder's scope and live as long as the returned plan.
     sh = AnnSharedState(emb, queries)
     # exact feeds every tier's match join (5 consumers) — persist
-    exact = _tracked_persist(
+    exact = lifetime.persist(
         topk_cosine(emb, queries, k=5, shared=sh).select("q_id", "neighbor_id")
     )
     n_q = _scalar(queries, F.count(F.lit(1)), "n_queries")
@@ -497,7 +497,7 @@ def q_ann_recall_check(spark, sf_dir):
             (F.col("m2") >= F.col("matches")).alias("recall_ok"),
         )
     )
-    return _scoped(out.unionByName(lsh_row))
+    return out.unionByName(lsh_row)
 
 
 @register(
@@ -666,13 +666,13 @@ def q_topk_sketch_exact_check(spark, sf_dir):
     # both 3-row frames feed two anti-joins AND the final crossJoin —
     # unpersisted, the exact aggregate and the sketch pass each re-scanned
     # orders once per consumer (round-13 audit: 5 scans in this one plan)
-    exact = _tracked_persist(
+    exact = lifetime.persist(
         orders.groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("o_orderpriority").asc())
         .limit(3)
     )
-    sk = _tracked_persist(
+    sk = lifetime.persist(
         orders.agg(F.expr("approx_top_k(o_orderpriority, 3)").alias("tk"))
         .select(F.explode("tk").alias("e"))
         .select(
@@ -730,7 +730,7 @@ def q_simhash_exact_dup_check(spark, sf_dir):
     h = docs.select(
         "doc_id", F.md5(normalized_text(F.col("text"))).alias("th")
     )
-    dup_pairs = _tracked_persist(
+    dup_pairs = lifetime.persist(
         h.alias("a")
         .join(h.alias("b"), F.col("a.th") == F.col("b.th"))
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -749,7 +749,7 @@ def q_simhash_exact_dup_check(spark, sf_dir):
         F.count(F.lit(1)),
         "m",
     )
-    return _scoped(
+    return (
         n_dup.crossJoin(F.broadcast(missed)).select(
             "n_exact_dup_pairs",
             (F.col("m") == 0).alias("simhash_zero_hamming_ok"),
@@ -783,10 +783,10 @@ def q_embedding_lsh_near_dup_check(spark, sf_dir):
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = _tracked_persist(
+    exact = lifetime.persist(
         embedding_near_dup_pairs(emb, threshold=0.42).select("d1", "d2")
     )
-    lsh = _tracked_persist(
+    lsh = lifetime.persist(
         embedding_near_dup_lsh(emb, threshold=0.42).select("d1", "d2")
     )
     n_exact = _scalar(exact, F.count(F.lit(1)), "n_exact_pairs")
@@ -796,7 +796,7 @@ def q_embedding_lsh_near_dup_check(spark, sf_dir):
     extra = _scalar(
         lsh.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
     )
-    return _scoped(
+    return (
         n_exact.crossJoin(F.broadcast(missed))
         .crossJoin(F.broadcast(extra))
         .select(
@@ -849,12 +849,12 @@ def q_embedding_lsh_t090_recall_check(spark, sf_dir):
     from mapreduce_paradigm_spark.queries.llm import _planted_twin_embeddings
 
     aug = _planted_twin_embeddings(spark, sf_dir)
-    exact = _tracked_persist(
+    exact = lifetime.persist(
         embedding_near_dup_pairs(aug, threshold=0.90, emb_col="e").select(
             "d1", "d2"
         )
     )
-    lsh = _tracked_persist(
+    lsh = lifetime.persist(
         embedding_near_dup_lsh(aug, threshold=0.90, emb_col="e").select("d1", "d2")
     )
     n_exact = _scalar(exact, F.count(F.lit(1)), "n_exact_pairs")
@@ -864,7 +864,7 @@ def q_embedding_lsh_t090_recall_check(spark, sf_dir):
     extra = _scalar(
         lsh.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
     )
-    return _scoped(
+    return (
         n_exact.crossJoin(F.broadcast(missed))
         .crossJoin(F.broadcast(extra))
         .select(

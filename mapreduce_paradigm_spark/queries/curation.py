@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -72,14 +73,12 @@ FROM j GROUP BY doc_id
     tags=("llm", "quality", "dedup"),
 )
 def q_doc_segment_boilerplate(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks")
     )
     # segs feeds BOTH the df aggregate and the flag join, so the tokenize
-    # + segment explode executes once per consumer. A _tracked_persist was
+    # + segment explode executes once per consumer. A persist was
     # tried in round 12 and REVERTED on measurement — caching the exploded
     # segment-string stream cost more than the duplicated codegen pass it
     # saved (isolated A/B at sf0.1: ~1.9-2.1 s persisted vs ~1.2-1.5 s
@@ -100,7 +99,7 @@ def q_doc_segment_boilerplate(spark, sf_dir):
     )
     j = segs.join(df, "seg")
     boiler = F.col("seg_df") >= _DF_MIN
-    return _scoped(
+    return (
         j.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_segments"),
             F.sum(boiler.cast("long")).alias("n_boiler"),
@@ -169,8 +168,6 @@ FROM shares s CROSS JOIN denom d
     tags=("llm", "sampling"),
 )
 def q_source_temperature_mixture(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
@@ -186,14 +183,14 @@ def q_source_temperature_mixture(spark, sf_dir):
     # feeds the normalizer and the output — unpersisted, each consumer
     # re-ran the corpus token-count scan (round-12 plan audit). Both are
     # per-source sized.
-    per_source = _tracked_persist(
+    per_source = lifetime.persist(
         tok.groupBy("source").agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_tok").alias("n_tokens"),
         )
     )
     tot = per_source.agg(F.sum("n_tokens").alias("total_tokens"))
-    shares = _tracked_persist(per_source.crossJoin(F.broadcast(tot)).select(
+    shares = lifetime.persist(per_source.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
         "n_tokens",
@@ -203,7 +200,7 @@ def q_source_temperature_mixture(spark, sf_dir):
         ).alias("p_alpha"),
     ))
     denom = shares.agg(F.sum("p_alpha").alias("z"))
-    return _scoped(shares.crossJoin(F.broadcast(denom)).select(
+    return shares.crossJoin(F.broadcast(denom)).select(
         "source",
         "n_docs",
         "n_tokens",
@@ -212,7 +209,7 @@ def q_source_temperature_mixture(spark, sf_dir):
         F.round(F.col("p_alpha") / F.col("z") / F.col("p_raw"), 4).alias(
             "sample_factor"
         ),
-    ))
+    )
 
 
 # --- CMS inner-product join-size estimate ------------------------------------
@@ -840,12 +837,10 @@ GROUP BY w, f_w, t
     tags=("text", "llm", "curation"),
 )
 def q_word_dispersion_dp(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents")
     # toks feeds ts and fws; fws feeds fw and the grid join — unpersisted,
     # the corpus tokenize re-ran per consumer (round-12 plan audit).
-    toks = _tracked_persist(
+    toks = lifetime.persist(
         docs.select(
             "source",
             F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("w"),
@@ -853,7 +848,7 @@ def q_word_dispersion_dp(spark, sf_dir):
     )
     ts = toks.groupBy("source").agg(F.count(F.lit(1)).alias("t_s"))
     tt = ts.agg(F.sum("t_s").alias("t"))
-    fws = _tracked_persist(
+    fws = lifetime.persist(
         toks.groupBy("w", "source").agg(F.count(F.lit(1)).alias("f_ws"))
     )
     fw = (
@@ -868,7 +863,7 @@ def q_word_dispersion_dp(spark, sf_dir):
             "w", "f_w", "t_s", F.coalesce(F.col("f_ws"), F.lit(0)).alias("f_ws")
         )
     )
-    return _scoped(
+    return (
         grid.crossJoin(F.broadcast(tt))
         .groupBy("w", "f_w", "t")
         .agg(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import doc_words
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
@@ -186,20 +187,18 @@ FROM h
     tags=("statistics",),
 )
 def q_qty_kruskal_wallis_h(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     li = load_table(spark, sf_dir, "lineitem")
     # v feeds the rank grid AND the per-group join; grid feeds ranked and
     # the tie correction; pergroup feeds tot and the final assembly —
     # unpersisted, each consumer re-ran its upstream back to the lineitem
     # scan (round-12 plan audit: 5 scans in this one plan). grid/pergroup
     # are distinct-value / group sized; v is two pruned columns.
-    v = _tracked_persist(
+    v = lifetime.persist(
         li.select(
             F.col("l_returnflag").alias("flag"), F.col("l_quantity").cast("long").alias("q")
         )
     )
-    grid = _tracked_persist(v.groupBy("q").agg(F.count(F.lit(1)).alias("cnt")))
+    grid = lifetime.persist(v.groupBy("q").agg(F.count(F.lit(1)).alias("cnt")))
     wcum = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, -1)
     ranked = grid.select(
         "q",
@@ -208,7 +207,7 @@ def q_qty_kruskal_wallis_h(spark, sf_dir):
             "r2"
         ),
     )
-    pergroup = _tracked_persist(
+    pergroup = lifetime.persist(
         v.join(F.broadcast(ranked.select("q", "r2")), "q")
         .groupBy("flag")
         .agg(
@@ -240,7 +239,7 @@ def q_qty_kruskal_wallis_h(spark, sf_dir):
         .select("n", "k", F.round(F.col("h_raw"), 6).alias("h_uncorrected"),
                 F.round(F.col("h_raw") / c_tie, 6).alias("h_stat"))
     )
-    return _scoped(h)
+    return h
 
 
 # --- Jensen-Shannon divergence between corpus sources ------------------------
@@ -303,8 +302,6 @@ GROUP BY 1, 2
     tags=("statistics", "drift", "llm"),
 )
 def q_source_unigram_js_divergence(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents")
     # round-12 plan audit: dw feeds vocab + sc, sc feeds totals + the grid
     # join, and grid feeds both sides of the pair self-join. sc and grid
@@ -322,13 +319,13 @@ def q_source_unigram_js_divergence(spark, sf_dir):
         .limit(_JS_VOCAB)
         .select("word")
     )
-    sc = _tracked_persist(
+    sc = lifetime.persist(
         dw.join(F.broadcast(vocab), "word")
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     totals = sc.groupBy("source").agg(F.sum("c").cast("long").alias("tot"))
-    grid = _tracked_persist(
+    grid = lifetime.persist(
         totals.crossJoin(F.broadcast(vocab))
         .join(sc, ["source", "word"], "left")
         .select(
@@ -361,7 +358,7 @@ def q_source_unigram_js_divergence(spark, sf_dir):
             .alias("js_micro"),
         )
     )
-    return _scoped(
+    return (
         terms.groupBy("source_a", "source_b").agg(
             (F.sum("js_micro").cast("decimal(24,6)") / 1000000)
             .cast("double")
@@ -509,8 +506,6 @@ FROM terms
     tags=("statistics", "drift", "events"),
 )
 def q_events_value_wasserstein_drift(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         F.round(F.col("value") * 1e6, 0).cast("long").alias("vm"),
@@ -524,13 +519,13 @@ def q_events_value_wasserstein_drift(spark, sf_dir):
     # times (round-12 before-plan: three identical Scan→HashAggregate
     # chains, nodes 1-5, 11-15, 24-28). grid is distinct-value-sized,
     # tot is one row.
-    grid = _tracked_persist(
+    grid = lifetime.persist(
         v.groupBy("vm").agg(
             F.sum("is_ref").cast("long").alias("c_ref"),
             F.sum(1 - F.col("is_ref")).cast("long").alias("c_cur"),
         )
     )
-    tot = _tracked_persist(
+    tot = lifetime.persist(
         grid.agg(
             F.sum("c_ref").cast("long").alias("n_ref"),
             F.sum("c_cur").cast("long").alias("n_cur"),
@@ -556,7 +551,7 @@ def q_events_value_wasserstein_drift(spark, sf_dir):
             ).alias("t")
         )
     )
-    return _scoped(
+    return (
         terms.agg(F.sum("t").alias("st"))
         .crossJoin(F.broadcast(tot))
         .select(
@@ -674,13 +669,11 @@ FROM parts
     tags=("statistics", "drift"),
 )
 def q_qty_brown_forsythe(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     li = load_table(spark, sf_dir, "lineitem")
     # v feeds the median grid AND the deviation join; s feeds tot and the
     # assembly — unpersisted, each consumer re-ran its upstream back to
     # the lineitem scan (round-12 plan audit).
-    v = _tracked_persist(
+    v = lifetime.persist(
         li.select(
             F.col("l_returnflag").alias("flag"), F.col("l_quantity").cast("long").alias("q")
         )
@@ -702,7 +695,7 @@ def q_qty_brown_forsythe(spark, sf_dir):
     z = v.join(F.broadcast(med), "flag").select(
         "flag", F.abs(F.col("q") - F.col("med")).alias("z")
     )
-    s = _tracked_persist(
+    s = lifetime.persist(
         z.groupBy("flag").agg(
             F.count(F.lit(1)).alias("n_g"),
             F.sum(F.col("z").cast("decimal(38,0)")).alias("s1"),
@@ -736,7 +729,7 @@ def q_qty_brown_forsythe(spark, sf_dir):
             "within_ss",
         )
     )
-    return _scoped(
+    return (
         parts.select(
             "n",
             "k",
@@ -920,24 +913,22 @@ FROM chi CROSS JOIN tot CROSS JOIN dims
     tags=("statistics", "drift"),
 )
 def q_priority_status_cramers_v(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     orders = load_table(spark, sf_dir, "orders")
     # o (the contingency table) feeds tot/rp/cs and the chi2 join — four
     # independent subtrees, so unpersisted the full orders scan + grouping
     # re-ran per consumer (round-12 plan audit: 7 scans in this one plan);
     # rp/cs/tot each feed two consumers themselves. All are
     # contingency-table sized.
-    o = _tracked_persist(
+    o = lifetime.persist(
         orders.groupBy(
             F.col("o_orderpriority").alias("p"), F.col("o_orderstatus").alias("st")
         ).agg(F.count(F.lit(1)).cast("long").alias("obs"))
     )
-    tot = _tracked_persist(o.agg(F.sum("obs").cast("long").alias("n")))
-    rp = _tracked_persist(
+    tot = lifetime.persist(o.agg(F.sum("obs").cast("long").alias("n")))
+    rp = lifetime.persist(
         o.groupBy("p").agg(F.sum("obs").cast("long").alias("rp"))
     )
-    cs = _tracked_persist(
+    cs = lifetime.persist(
         o.groupBy("st").agg(F.sum("obs").cast("long").alias("cs"))
     )
     e = F.col("rp").cast("double") * F.col("cs") / F.col("n")
@@ -956,7 +947,7 @@ def q_priority_status_cramers_v(spark, sf_dir):
     dims = rp.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
         cs.agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    return _scoped(
+    return (
         chi.crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(dims))
         .select(
@@ -2257,8 +2248,6 @@ FROM final f CROSS JOIN crossing c
 def q_ab_conversion_sprt(spark, sf_dir):
     import math
 
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     assigned = (
         ev.groupBy("user_id")
@@ -2288,7 +2277,7 @@ def q_ab_conversion_sprt(spark, sf_dir):
     # walk feeds three subtrees (crossing, final, decide_val); cache scoped
     # to the returned plan so repeated invocations in a long-lived session
     # don't accumulate cached blocks (dedup-family discipline)
-    walk = _tracked_persist(walk)
+    walk = lifetime.persist(walk)
     a_mi, b_mi = int(_SPRT_A * 1e6), int(_SPRT_B * 1e6)
     crossing = walk.filter(
         (F.col("llr_micro") >= a_mi) | (F.col("llr_micro") <= b_mi)
@@ -2313,7 +2302,7 @@ def q_ab_conversion_sprt(spark, sf_dir):
             .alias("decision"),
         )
     )
-    return _scoped(out)
+    return out
 
 
 # --- group-sequential monitoring (O'Brien-Fleming) ---------------------------

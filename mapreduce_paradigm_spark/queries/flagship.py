@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import doc_words
 from mapreduce_paradigm_spark.operators.index import (
     inverted_index,
@@ -468,7 +469,6 @@ GROUP BY doc_id
 )
 def q_bm25_ranking(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import doc_words
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
 
     terms_wanted = ("hash", "join", "batch")
     docs = load_table(spark, sf_dir, "documents")
@@ -488,14 +488,14 @@ def q_bm25_ranking(spark, sf_dir):
     # token stream once per consumer (round-12 plan audit: the dl and tf
     # HashAggregate+Exchange chains each appeared twice). Both frames are
     # per-doc / per-(doc,term) sized, far smaller than the token stream.
-    dl = _tracked_persist(
+    dl = lifetime.persist(
         dw.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     )
     n = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
-    tf = _tracked_persist(
+    tf = lifetime.persist(
         dw.filter(F.col("word").isin(*terms_wanted))
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -521,12 +521,12 @@ def q_bm25_ranking(spark, sf_dir):
             F.round(score * 1e6, 0).cast("long").alias("score_micro"),
         )
     )
-    return _scoped(terms.groupBy("doc_id").agg(
+    return terms.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_terms"),
         (F.sum("score_micro").cast("decimal(24,6)") / F.lit(1000000))
         .cast("double")
         .alias("bm25"),
-    ))
+    )
 
 
 @register(

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -62,10 +63,7 @@ WHERE n_both >= 5
     tags=("text", "llm", "cooccurrence"),
 )
 def q_word_cooccurrence_pmi(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _persist_if_input_ge,
-        _scoped,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _persist_if_input_ge
 
     docs = load_table(spark, sf_dir, "documents")
     # ONE scan of the text column: the per-doc vocabulary arrays feed all
@@ -109,7 +107,7 @@ def q_word_cooccurrence_pmi(spark, sf_dir):
     )
     d1 = df.select(F.col("w").alias("w1"), F.col("df").alias("df1"))
     d2 = df.select(F.col("w").alias("w2"), F.col("df").alias("df2"))
-    return _scoped(
+    return (
         pairs.join(F.broadcast(d1), "w1")
         .join(F.broadcast(d2), "w2")
         .crossJoin(F.broadcast(n))
@@ -177,10 +175,7 @@ FROM cells
     tags=("text", "llm", "cooccurrence", "statistics"),
 )
 def q_word_collocation_llr(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _persist_if_input_ge,
-        _scoped,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _persist_if_input_ge
 
     docs = load_table(spark, sf_dir, "documents")
     # size-gated like q_word_cooccurrence_pmi (same frames, same r13
@@ -256,7 +251,7 @@ def q_word_collocation_llr(spark, sf_dir):
             F.col("k22"), (F.col("nn") - F.col("c1")) * (F.col("nn") - F.col("c2"))
         )
     )
-    return _scoped(
+    return (
         cells.select("w1", "w2", "n_both", F.round(g2, 6).alias("llr"))
     )
 
@@ -293,8 +288,6 @@ JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
     tags=("graph", "join", "documents"),
 )
 def q_doc_graph_triangles(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
@@ -314,7 +307,7 @@ def q_doc_graph_triangles(spark, sf_dir):
     # derivation (scan + explode + distinct exchange) re-ran once per
     # role (round-12 plan audit: 6 scans in this one plan). Edge-list
     # sized.
-    e = _tracked_persist(
+    e = lifetime.persist(
         e0.filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
@@ -324,7 +317,7 @@ def q_doc_graph_triangles(spark, sf_dir):
     e1 = e.select(F.col("a").alias("v1"), F.col("b").alias("v2"))
     e2 = e.select(F.col("a").alias("v2"), F.col("b").alias("v3"))
     e3 = e.select(F.col("a").alias("v1"), F.col("b").alias("v3"))
-    return _scoped(
+    return (
         e1.join(e2, "v2").join(e3, ["v1", "v3"]).select("v1", "v2", "v3")
     )
 
@@ -604,8 +597,6 @@ WHERE d.deg >= 2
     tags=("graph", "join", "documents"),
 )
 def q_doc_graph_clustering_coeff(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
@@ -623,7 +614,7 @@ def q_doc_graph_clustering_coeff(spark, sf_dir):
     )
     # feeds degrees AND the two-hop triangle join; cache scoped to the
     # returned plan (freed when the caller drops the result)
-    e = _tracked_persist(
+    e = lifetime.persist(
         e0.filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
@@ -660,7 +651,7 @@ def q_doc_graph_clustering_coeff(spark, sf_dir):
             ).alias("cc"),
         )
     )
-    return _scoped(out)
+    return out
 
 
 # --- k-core decomposition ----------------------------------------------------
@@ -992,8 +983,6 @@ FROM c2 GROUP BY 1
     tags=("graph", "iterative", "documents"),
 )
 def q_doc_graph_wl_colors(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     e0 = (
@@ -1023,7 +1012,7 @@ def q_doc_graph_wl_colors(spark, sf_dir):
     # each WL round consumes colors TWICE (the neighbor-color stream and
     # the refinement join) — unpersisted, the recompute doubled per round
     # (round-12 plan audit). Node-sized frame, persisted per round.
-    colors = _tracked_persist(
+    colors = lifetime.persist(
         docs.join(deg, docs["doc_id"] == deg["v"], "left")
         .select(
             F.col("doc_id").alias("v"),
@@ -1049,8 +1038,8 @@ def q_doc_graph_wl_colors(spark, sf_dir):
                 ).alias("c"),
             )
         )
-        colors = _tracked_persist(colors)
-    return _scoped(
+        colors = lifetime.persist(colors)
+    return (
         colors.groupBy(F.col("c").alias("wl_color")).agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
             F.min("v").cast("long").alias("min_doc"),
@@ -1424,8 +1413,6 @@ WHERE e.a IS NULL AND s.common_neighbors >= 2
     tags=("graph", "documents", "similarity"),
 )
 def q_doc_graph_adamic_adar(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
@@ -1435,7 +1422,7 @@ def q_doc_graph_adamic_adar(spark, sf_dir):
     # the edge derivation from the raw scan (round-12 plan audit: 14
     # parquet scans of documents in this one plan). Both frames are
     # edge-list sized.
-    e = _tracked_persist(
+    e = lifetime.persist(
         docs.crossJoin(F.broadcast(ncnt))
         .select(
             F.col("node").alias("x"),
@@ -1454,7 +1441,7 @@ def q_doc_graph_adamic_adar(spark, sf_dir):
         )
         .distinct()
     )
-    adj = _tracked_persist(
+    adj = lifetime.persist(
         e.select(F.col("a").alias("z"), F.col("b").alias("v")).unionByName(
             e.select(F.col("b").alias("z"), F.col("a").alias("v"))
         )
@@ -1471,7 +1458,7 @@ def q_doc_graph_adamic_adar(spark, sf_dir):
             F.round(F.sum(1.0 / F.log(F.col("deg"))), 6).alias("adamic_adar"),
         )
     )
-    return _scoped(
+    return (
         scored.join(
             e,
             (e.a == scored.u) & (e.b == scored.w),

@@ -11,9 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.operators.dedup import (
-    _scoped,
-    _tracked_persist,
     delta_jaccard_pairs,
     exact_duplicate_groups,
     jaccard_pairs,
@@ -1203,7 +1202,7 @@ def q_source_distinctive_terms(spark, sf_dir):
     )
     # sc feeds stot/g/gtot and the scoring join — unpersisted, the corpus
     # tokenize + grouping re-ran per consumer (round-12 plan audit).
-    sc = _tracked_persist(
+    sc = lifetime.persist(
         w.groupBy("source", "wd").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_s")
         )
@@ -1232,7 +1231,7 @@ def q_source_distinctive_terms(spark, sf_dir):
             F.row_number().over(wrank).cast("bigint").alias("rnk"),
         )
     )
-    return _scoped(scored.filter(F.col("rnk") <= 5))
+    return scored.filter(F.col("rnk") <= 5)
 
 
 @register(
@@ -1645,7 +1644,7 @@ def q_embedding_mutual_top1_pairs(spark, sf_dir):
     # ~2 s at sf0.1 in r12 (the old broadcast-nested-loop evaluated an
     # interpreted array fold per (src, dst) pair); oracle-verified at
     # sf0.001/0.01/0.1 again after the r13 ranking change.
-    best = _tracked_persist(
+    best = lifetime.persist(
         topk_cosine(
             emb, emb, k=1, rank_micros=True, n_queries=emb.count()
         ).select(
@@ -1655,7 +1654,7 @@ def q_embedding_mutual_top1_pairs(spark, sf_dir):
         )
     )
     x, y = best.alias("x"), best.alias("y")
-    return _scoped(
+    return (
         x.join(y, (F.col("x.dst") == F.col("y.src")) & (F.col("x.src") == F.col("y.dst")))
         .filter(F.col("x.src") < F.col("x.dst"))
         .select(
@@ -1980,7 +1979,7 @@ def q_source_kmv_overlap(spark, sf_dir):
     # sk feeds srcs, both m branches and the s1/s2 semi-joins — unpersisted,
     # each consumer re-ran the corpus tokenize + distinct + window (round-12
     # plan audit: 14 parquet scans in this one plan). n_sources x K rows.
-    sk = _tracked_persist(
+    sk = lifetime.persist(
         hvs.withColumn("r", F.row_number().over(w))
         .filter(F.col("r") <= K)
         .select("source", "hv")
@@ -2008,7 +2007,7 @@ def q_source_kmv_overlap(spark, sf_dir):
     wn = Window.partitionBy("src_a", "src_b")
     # topk feeds the union-size aggregate and the intersection semi-joins;
     # sketch-sized, so persist beats recomputing the merge windows
-    topk = _tracked_persist(
+    topk = lifetime.persist(
         m.withColumn("r", F.row_number().over(wp))
         .withColumn("m_n", F.count(F.lit(1)).over(wn))
         .filter(F.col("r") <= K)
@@ -2030,7 +2029,7 @@ def q_source_kmv_overlap(spark, sf_dir):
         F.col("m_n") >= K, (K - 1) / (F.col("kv").cast("double") / F.lit(hspace))
     ).otherwise(F.col("m_n").cast("double"))
     jac = F.coalesce(F.col("ki"), F.lit(0)).cast("double") / F.col("kn")
-    return _scoped(
+    return (
         agg.join(icount, ["src_a", "src_b"], "left")
         .select(
             "src_a",
@@ -2456,7 +2455,7 @@ def q_doc_bigram_interp_nll(spark, sf_dir):
     seq = toks.withColumn("prev", F.lag("word").over(w))
     uni = toks.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("cw"))
     tot = toks.agg(F.count(F.lit(1)).cast("long").alias("t"))
-    bi = _tracked_persist(
+    bi = lifetime.persist(
         seq.filter(F.col("prev").isNotNull())
         .groupBy("prev", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("cbw"))
@@ -2478,7 +2477,7 @@ def q_doc_bigram_interp_nll(spark, sf_dir):
             F.round(-F.log(p) * 1e6, 0).cast("long").alias("nll_micro"),
         )
     )
-    return _scoped(scored.groupBy("source").agg(
+    return scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.round(
             F.sum(F.col("nll_micro").cast("decimal(38,0)")).cast("double")
@@ -2486,7 +2485,7 @@ def q_doc_bigram_interp_nll(spark, sf_dir):
             / 1e6,
             6,
         ).alias("avg_nll"),
-    ))
+    )
 
 
 _DSIR_SQL_BODY = """
@@ -2578,12 +2577,12 @@ def _dsir_doc_scores(spark, sf_dir):
     # lr — unpersisted, each consumer re-ran the corpus tokenize + bucket
     # aggregation (round-12 plan audit: 5 scans in this one plan). feats
     # is (doc x bucket)-sized, bt is B rows.
-    feats = _tracked_persist(
+    feats = lifetime.persist(
         dw.select("doc_id", bucket.alias("b"))
         .groupBy("doc_id", "b")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    bt = _tracked_persist(
+    bt = lifetime.persist(
         feats.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy("b")
         .agg(
@@ -2608,7 +2607,7 @@ def _dsir_doc_scores(spark, sf_dir):
         "n",
         F.round(F.col("n") * F.col("lr") * 1_000_000, 0).cast("long").alias("micro"),
     )
-    return _scoped(
+    return (
         terms.groupBy("doc_id").agg(
             F.sum("n").alias("n_tokens"),
             (F.sum("micro").cast("decimal(24,6)") / F.lit(1_000_000))
@@ -2882,10 +2881,9 @@ def _bpe_oracle(rounds: int = 3) -> str:
 )
 def q_bpe_learn_merges(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import doc_words
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
-    wc = _tracked_persist(
+    wc = lifetime.persist(
         doc_words(docs).groupBy("word").agg(F.count(F.lit(1)).alias("wn"))
     )
     v = wc.select(
@@ -2945,7 +2943,7 @@ def q_bpe_learn_merges(spark, sf_dir):
             "corpus_symbols_after",
         )
         out = row if out is None else out.unionByName(row)
-    return _scoped(out)
+    return out
 
 
 def _bpe_encode_oracle(rounds: int = 3) -> str:
@@ -3022,7 +3020,6 @@ GROUP BY 1
 )
 def q_bpe_encode_corpus(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import normalized_word, tokens
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     words = (
@@ -3032,7 +3029,7 @@ def q_bpe_encode_corpus(spark, sf_dir):
         .select("source", normalized_word(F.col("token")).alias("word"))
         .filter(F.length("word") > 0)
     )
-    swc = _tracked_persist(
+    swc = lifetime.persist(
         words.groupBy("source", "word").agg(
             F.count(F.lit(1)).cast("long").alias("swn")
         )
@@ -3091,4 +3088,4 @@ def q_bpe_encode_corpus(spark, sf_dir):
             ).alias("chars_per_token_micro"),
         )
     )
-    return _scoped(out)
+    return out

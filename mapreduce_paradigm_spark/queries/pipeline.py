@@ -195,11 +195,7 @@ GROUP BY 1
     tags=("dedup", "textstats", "llm"),
 )
 def q_duplicated_span_fraction(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _scoped,
-        _tracked_persist,
-        hashed_shingles,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import hashed_shingles
 
     # round 12: per-doc span-set semantics via the in-array dedup (same
     # rows as explode().distinct(), minus the corpus-scale distinct
@@ -213,7 +209,7 @@ def q_duplicated_span_fraction(spark, sf_dir):
     )
     sdf = sh.groupBy("sid").agg(F.count("*").alias("sdf"))
     dup = F.sum(F.when(F.col("sdf") >= 2, 1).otherwise(0)).cast("long")
-    return _scoped(
+    return (
         sh.join(sdf, "sid")
         .groupBy("doc_id")
         .agg(
@@ -261,15 +257,11 @@ FROM dup GROUP BY doc_id, grp
     tags=("dedup", "textstats", "llm"),
 )
 def q_duplicate_span_extraction(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _scoped,
-        _tracked_persist,
-        hashed_shingles_pos,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import hashed_shingles_pos
 
     # sh feeds BOTH the window-df aggregate and the dup-sid semi-join, so
     # the tokenize + position explode executes once per consumer. A
-    # _tracked_persist(sh) was tried in round 12 and REVERTED on
+    # lifetime.persist(sh) was tried in round 12 and REVERTED on
     # measurement: building the cache for the exploded corpus-scale
     # stream cost more than the duplicated codegen pass it saved
     # (isolated A/B at sf0.1: 2.1-3.1 s persisted vs 1.2-1.7 s
@@ -284,7 +276,7 @@ def q_duplicate_span_extraction(spark, sf_dir):
     )
     dup = sh.join(dup_sids, "sid", "left_semi")
     w = Window.partitionBy("doc_id").orderBy("pos")
-    return _scoped(
+    return (
         dup.withColumn("grp", F.col("pos") - F.row_number().over(w))
         .groupBy("doc_id", "grp")
         .agg(
@@ -874,14 +866,12 @@ GROUP BY 1, 2
     tags=("llm", "pipeline", "dedup", "quality", "packing"),
 )
 def q_training_corpus_pipeline(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     docs = load_table(spark, sf_dir, "documents")
     wdd = Window.partitionBy(
         F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     ).orderBy("doc_id")
     # kept feeds BOTH the quality-metrics path and the packer join, so
-    # the dedup window executes once per consumer. A _tracked_persist was
+    # the dedup window executes once per consumer. A persist was
     # tried in round 12 and REVERTED on measurement (caching the full-text
     # rows cost more than the duplicated window at bench scale: 1.8 s vs
     # 1.2 s isolated min-of-3); the packer join consumes only
@@ -914,7 +904,7 @@ def q_training_corpus_pipeline(spark, sf_dir):
         q.join(kept.select("doc_id", "source"), "doc_id")
         .withColumn("cum_before", F.coalesce(F.sum("n_words").over(wp), F.lit(0)))
     )
-    return _scoped(
+    return (
         cum.groupBy(
             "source", F.expr("cum_before DIV 512").alias("bin_id")
         ).agg(

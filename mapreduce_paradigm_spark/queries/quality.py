@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -505,14 +506,12 @@ GROUP BY 1, 2, t.total
     tags=("quality", "privacy"),
 )
 def q_customer_t_closeness(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     cust = load_table(spark, sf_dir, "customer")
     # cls_nat feeds the class sizes, the global distribution and the grid
     # join; glob feeds tot and the grid — unpersisted, each consumer
     # re-ran the customer scan + grouping (round-12 plan audit). Both are
     # (class x nation) sized.
-    cls_nat = _tracked_persist(
+    cls_nat = lifetime.persist(
         cust.groupBy(
             "c_mktsegment",
             F.floor(F.col("c_acctbal") / 1000).cast("long").alias("acctbal_band"),
@@ -522,7 +521,7 @@ def q_customer_t_closeness(spark, sf_dir):
     cls = cls_nat.groupBy("c_mktsegment", "acctbal_band").agg(
         F.sum("cnt").cast("long").alias("class_size")
     )
-    glob = _tracked_persist(
+    glob = lifetime.persist(
         cls_nat.groupBy("c_nationkey").agg(
             F.sum("cnt").cast("long").alias("gcnt")
         )
@@ -547,7 +546,7 @@ def q_customer_t_closeness(spark, sf_dir):
     dist = F.sum(
         F.abs(F.col("cnt") * F.col("total") - F.col("gcnt") * F.col("class_size"))
     ) / (F.lit(2.0) * F.max("class_size") * F.max("total"))
-    return _scoped(
+    return (
         grid.groupBy("c_mktsegment", "acctbal_band").agg(
             F.max("class_size").cast("long").alias("class_size"),
             F.round(dist, 4).alias("t_closeness"),

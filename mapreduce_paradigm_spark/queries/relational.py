@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import davg, dsum
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table, register_views
@@ -1530,18 +1531,16 @@ GROUP BY 1, 2
     tags=("setops",),
 )
 def q_order_month_multiset_ops(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     orders = _t(spark, sf_dir, "orders")
     month = F.date_trunc("month", F.col("o_orderdate")).alias("month")
     # f and o each feed BOTH multiset operators — unpersisted, each
     # branch re-scanned orders (4 scans in the round-12 before-plan).
     # Single-column frames, spill-safe.
-    f = _tracked_persist(orders.filter(F.col("o_orderstatus") == "F").select(month))
-    o = _tracked_persist(orders.filter(F.col("o_orderstatus") == "O").select(month))
+    f = lifetime.persist(orders.filter(F.col("o_orderstatus") == "F").select(month))
+    o = lifetime.persist(orders.filter(F.col("o_orderstatus") == "O").select(month))
     x = f.exceptAll(o).select("month", F.lit("except_all").alias("op"))
     i = f.intersectAll(o).select("month", F.lit("intersect_all").alias("op"))
-    return _scoped(
+    return (
         x.unionByName(i)
         .groupBy("op", "month")
         .agg(F.count(F.lit(1)).alias("multiplicity"))

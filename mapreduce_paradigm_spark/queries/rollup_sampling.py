@@ -58,10 +58,7 @@ FROM events GROUP BY 2
     tags=("timeseries", "rollup", "events"),
 )
 def q_events_multigrain_rollup(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _persist_if_input_ge,
-        _scoped,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _persist_if_input_ge
 
     ev = load_table(spark, sf_dir, "events")
     # minute feeds its own output branch AND the hour re-aggregation (which
@@ -102,7 +99,7 @@ def q_events_multigrain_rollup(spark, sf_dir):
             .alias("val"),
         )
 
-    return _scoped(
+    return (
         out(minute, "minute").unionAll(out(hour, "hour")).unionAll(
             out(day, "day")
         )

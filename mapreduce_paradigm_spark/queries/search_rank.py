@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import doc_words
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
@@ -86,8 +87,6 @@ ORDER BY rnk LIMIT 50
     tags=("flagship", "index", "search"),
 )
 def q_query_likelihood_dirichlet(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped
-
     docs = load_table(spark, sf_dir, "documents")
     # dl, C, cf and tf each re-derive this stream (4 scans in the plan) —
     # but doc_words is an EXPLODED corpus-scale token stream, the persist
@@ -114,7 +113,7 @@ def q_query_likelihood_dirichlet(spark, sf_dir):
     )
     scored = terms.groupBy("doc_id").agg(F.sum("score_micro").alias("ql_micro"))
     w = Window.orderBy(F.col("ql_micro").desc(), F.col("doc_id").asc())
-    return _scoped(
+    return (
         scored.select(
             "doc_id",
             (F.col("ql_micro").cast("decimal(24,6)") / F.lit(1000000))
@@ -201,11 +200,7 @@ ORDER BY rnk LIMIT 20
     tags=("flagship", "search", "similarity", "llm"),
 )
 def q_hybrid_rrf_fusion(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _input_bytes_ge,
-        _scoped,
-        _tracked_persist,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _input_bytes_ge
     from mapreduce_paradigm_spark.operators.similarity import topk_cosine
     from mapreduce_paradigm_spark.registry import all_specs
 
@@ -248,8 +243,8 @@ def q_hybrid_rrf_fusion(spark, sf_dir):
     # shapes provably emit identical rows (equality pinned in pytest with
     # a forced floor; oracle green at 3 SFs either way).
     if _input_bytes_ge(docs):
-        bm = _tracked_persist(bm)  # feeds the top-T window + count-join
-        vec_rank = _tracked_persist(vec_rank)  # feeds fusion + count-join
+        bm = lifetime.persist(bm)  # feeds the top-T window + count-join
+        vec_rank = lifetime.persist(vec_rank)  # feeds fusion + count-join
         _T = 140
         wt = Window.orderBy(F.col("bm25_micro").desc(), F.col("doc_id").asc())
         text_tops = (
@@ -299,7 +294,7 @@ def q_hybrid_rrf_fusion(spark, sf_dir):
         )
     )
     wf = Window.orderBy(F.col("rrf_micro").desc(), F.col("doc_id").asc())
-    return _scoped(
+    return (
         fused.select(
             "doc_id", "r_text", "r_vec",
             (F.col("rrf_micro").cast("decimal(24,6)") / F.lit(1000000))

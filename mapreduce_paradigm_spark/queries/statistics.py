@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dsum
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
@@ -350,13 +351,11 @@ FROM o JOIN rp ON o.p = rp.p JOIN cs ON o.st = cs.st CROSS JOIN tot
     tags=("analytics", "statistics", "orders"),
 )
 def q_priority_status_chi2(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     orders = load_table(spark, sf_dir, "orders")
     # o (the contingency table) feeds tot/rp/cs and the term join — four
     # independent subtrees, so unpersisted the orders scan + grouping
     # re-ran per consumer (round-12 plan audit). Contingency-table sized.
-    o = _tracked_persist(
+    o = lifetime.persist(
         orders.groupBy(
             F.col("o_orderpriority").alias("p"),
             F.col("o_orderstatus").alias("st"),
@@ -367,7 +366,7 @@ def q_priority_status_chi2(spark, sf_dir):
     cs = o.groupBy("st").agg(F.sum("obs").alias("cs"))
     expected = F.col("rp").cast("double") * F.col("cs") / F.col("n")
     term = F.pow(F.col("obs") - expected, 2) / expected
-    return _scoped(
+    return (
         o.join(F.broadcast(rp), "p")
         .join(F.broadcast(cs), "st")
         .crossJoin(F.broadcast(tot))
@@ -481,12 +480,10 @@ WHERE n_both >= 2
     tags=("analytics", "cooccurrence", "lineitem"),
 )
 def q_part_copurchase_lift(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     # the distinct (order, part) stream feeds the order count, the part
     # frequencies and the basket build — unpersisted, the scan + distinct
     # exchange re-ran per consumer (round-12 plan audit).
-    li = _tracked_persist(
+    li = lifetime.persist(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
@@ -508,7 +505,7 @@ def q_part_copurchase_lift(spark, sf_dir):
     )
     f1 = pf.select(F.col("l_partkey").alias("p1"), F.col("n_ord").alias("f1"))
     f2 = pf.select(F.col("l_partkey").alias("p2"), F.col("n_ord").alias("f2"))
-    return _scoped(
+    return (
         pairs.join(F.broadcast(f1), "p1")
         .join(F.broadcast(f2), "p2")
         .crossJoin(F.broadcast(n))
@@ -848,8 +845,6 @@ GROUP BY d.event_type
     tags=("statistics", "anomaly"),
 )
 def q_value_mad_outliers(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     events = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     med = events.groupBy("event_type").agg(
         F.percentile("value", 0.5).alias("med")
@@ -857,13 +852,13 @@ def q_value_mad_outliers(spark, sf_dir):
     # dev feeds the MAD aggregate AND the outlier rollup — unpersisted,
     # the events scan + median join re-ran per consumer (round-12 plan
     # audit). Narrow 4-column frame, spill-safe.
-    dev = _tracked_persist(
+    dev = lifetime.persist(
         events.join(F.broadcast(med), "event_type").select(
             "event_type", "value", "med", F.abs(F.col("value") - F.col("med")).alias("adev")
         )
     )
     mad = dev.groupBy("event_type").agg(F.percentile("adev", 0.5).alias("mad"))
-    return _scoped(
+    return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")
         .agg(

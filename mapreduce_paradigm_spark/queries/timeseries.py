@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dsum
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
@@ -281,26 +282,24 @@ FROM v LEFT JOIN c ON v.user_id = c.user_id
     tags=("funnel", "events", "join"),
 )
 def q_user_funnel_stages(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     # each stage frame feeds the NEXT stage's gate join AND the final
     # wide join — independent subtrees, so unpersisted every stage
     # re-ran its whole upstream chain back to the events scan (round-12
     # plan audit: 6 scans in this one plan). All three are per-user sized.
-    v = _tracked_persist(
+    v = lifetime.persist(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_view"))
     )
-    c = _tracked_persist(
+    c = lifetime.persist(
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") >= F.col("first_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_click"))
     )
-    p = _tracked_persist(
+    p = lifetime.persist(
         ev.filter(F.col("event_type") == "purchase")
         .join(c, "user_id")
         .filter(F.col("ts") >= F.col("first_click"))
@@ -312,7 +311,7 @@ def q_user_funnel_stages(spark, sf_dir):
         + F.when(F.col("first_click").isNull(), 0).otherwise(1)
         + F.when(F.col("first_purchase").isNull(), 0).otherwise(1)
     )
-    return _scoped(
+    return (
         v.join(c, "user_id", "left")
         .join(p, "user_id", "left")
         .select(
@@ -2051,8 +2050,6 @@ FROM m
     tags=("timeseries", "events", "correlation"),
 )
 def q_click_purchase_cross_correlation(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -2067,7 +2064,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
     # unpersisted, each consumer re-ran the events scan + hourly
     # aggregate (round-12 plan audit: 6 scans in this one plan). Both
     # frames are series-length.
-    cnt = _tracked_persist(
+    cnt = lifetime.persist(
         ev.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(
             F.date_trunc("hour", "ts").alias("hr"), "event_type"
@@ -2080,7 +2077,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
     y = cnt.filter(F.col("event_type") == "purchase").select(
         "hr", F.col("c").alias("y")
     )
-    xy = _tracked_persist(
+    xy = lifetime.persist(
         spine.join(F.broadcast(x), "hr", "left")
         .join(F.broadcast(y), "hr", "left")
         .select(
@@ -2108,7 +2105,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    return _scoped(m.select(
+    return m.select(
         F.col("lag").cast("long").alias("lag_hours"),
         "n",
         F.round(
@@ -2121,7 +2118,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
             ),
             6,
         ).alias("ccf"),
-    ))
+    )
 
 
 # --- Granger-lite: does click lead purchase? ----------------------------------
@@ -2199,8 +2196,6 @@ FROM p
     tags=("timeseries", "events", "statistics", "correlation"),
 )
 def q_click_purchase_granger_lite(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
-
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
@@ -2212,7 +2207,7 @@ def q_click_purchase_granger_lite(spark, sf_dir):
     # cnt feeds the x and y slices, and xy feeds both lag-join sides —
     # same multi-consumer recompute as the cross-correlation query
     # (round-12 plan audit); both frames are series-length.
-    cnt = _tracked_persist(
+    cnt = lifetime.persist(
         ev.filter(F.col("event_type").isin("click", "purchase"))
         .groupBy(F.date_trunc("hour", "ts").alias("hr"), "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -2223,7 +2218,7 @@ def q_click_purchase_granger_lite(spark, sf_dir):
     y = cnt.filter(F.col("event_type") == "purchase").select(
         "hr", F.col("c").alias("y")
     )
-    xy = _tracked_persist(
+    xy = lifetime.persist(
         spine.join(F.broadcast(x), "hr", "left")
         .join(F.broadcast(y), "hr", "left")
         .select(
@@ -2280,7 +2275,7 @@ def q_click_purchase_granger_lite(spark, sf_dir):
     rp = (r13 - r12 * r23) / F.sqrt(
         (1.0 - r12 * r12) * (1.0 - r23 * r23)
     )
-    return _scoped(
+    return (
         m.select(
             "n",
             F.round(rp, 6).alias("r_partial"),

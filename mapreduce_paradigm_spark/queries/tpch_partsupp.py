@@ -22,8 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dsum
-from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -137,7 +137,7 @@ def q_mincost_supplier_per_part(spark, sf_dir):
     # eu_ps feeds the min-cost aggregate AND the equality self-join —
     # unpersisted, the partsupp derivation + supplier join ran twice
     # (round-12 plan audit).
-    eu_ps = _tracked_persist(
+    eu_ps = lifetime.persist(
         ps.join(F.broadcast(eu), ps.ps_suppkey == eu.s_suppkey)
     )
     # renamed group key: eu_ps feeds both sides of the min-equality self
@@ -145,7 +145,7 @@ def q_mincost_supplier_per_part(spark, sf_dir):
     min_cost = eu_ps.groupBy(F.col("ps_partkey").alias("mk")).agg(
         F.min("ps_supplycost").alias("min_cost")
     )
-    return _scoped(
+    return (
         eu_ps.join(
             min_cost,
             (F.col("ps_partkey") == F.col("mk"))
@@ -208,7 +208,7 @@ def q_partsupp_value_concentration(spark, sf_dir):
     # promises one aggregate frame for both roles; the persist is what
     # actually delivers that (round-12 plan audit: unpersisted, the
     # derivation + aggregate ran twice).
-    v = _tracked_persist(
+    v = lifetime.persist(
         ps.join(F.broadcast(nat), ps.ps_suppkey == nat.s_suppkey)
         .groupBy("ps_partkey")
         .agg(dsum(F.col("ps_supplycost") * F.col("ps_availqty"), "value"))
@@ -216,7 +216,7 @@ def q_partsupp_value_concentration(spark, sf_dir):
     mean = v.agg(
         (F.sum("value") / F.count(F.lit(1))).alias("mean_value")
     )
-    return _scoped(
+    return (
         v.crossJoin(F.broadcast(mean))
         .filter(F.col("value") > F.col("mean_value") * F.lit(2.0))
         .select("ps_partkey", "value")

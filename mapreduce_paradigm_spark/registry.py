@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_paradigm_spark import lifetime
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
@@ -50,32 +52,11 @@ def register(
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
-        def scoped_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # builder-level cache scope (round 13): operator-internal
-            # persists/broadcasts — and intermediate operator results the
-            # builder derives from — live exactly as long as the RETURNED
-            # plan. Without this, `op(...).select(...)` dropped the
-            # operator's frame immediately, its finalizer unpersisted the
-            # internal caches before first use, and the plan silently
-            # degraded to raw re-scans (see operators.dedup._scope_begin).
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _scope_begin,
-                _scope_end,
-            )
-
-            _scope_begin()
-            out = None
-            try:
-                out = fn(spark, sf_dir)
-                return out
-            finally:
-                _scope_end(out)
-
-        scoped_builder.__name__ = getattr(fn, "__name__", name)
-        scoped_builder.__doc__ = fn.__doc__
         _REGISTRY[name] = QuerySpec(
             name=name,
-            builder=scoped_builder,
+            # every builder runs in its own cache scope: the caches it and
+            # the operators it calls make live as long as the plan it returns
+            builder=lifetime.scoped(fn),
             oracle=oracle.strip() if oracle else None,
             description=description,
             bench=bench,

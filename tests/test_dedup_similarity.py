@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.operators.dedup import (
     exact_duplicate_groups,
     jaccard_pairs,
@@ -347,7 +348,7 @@ def test_embedding_lsh_stats_counts(spark):
     # independent distinct-candidate recount at this tiny n (the stats
     # helper deliberately never materializes pairs at scale)
     distinct = (
-        _sign_band_signatures(
+        lifetime.scoped(_sign_band_signatures)(
             emb, st["nbits"], st["bands"], 64, 7, "vec_id", "embedding"
         )
         .groupBy("band", "bucket")
@@ -1122,7 +1123,7 @@ def test_lsh_quantized_prefilter_output_equality(spark):
     n = emb.count()
     for threshold in (0.42, 0.90):
         prm = lsh_params(n, threshold, target_recall=0.99)
-        sig = _sign_band_signatures(
+        sig = lifetime.scoped(_sign_band_signatures)(
             emb, prm["nbits"], prm["bands"], 64, 7, "vec_id", "embedding"
         )
         cand = (

@@ -10,36 +10,38 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import mapreduce_paradigm_spark.operators.dedup as dd
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.sources.tables import load_table
 
 from .conftest import SF_CORRECT
 
 
+@lifetime.scoped
+def _gate(df, src):
+    """Run the size gate inside a cache scope: (result persisted, scope
+    owns the result, handles the scope owns). The tuple result is not a
+    plan, so the scope releases its handles as it returns."""
+    out = dd._persist_if_input_ge(df, src)
+    owned = lifetime._SCOPE.get()
+    return out.is_cached, any(h is out._jdf for h in owned), len(owned)
+
+
 def test_gate_closed_below_floor(spark):
-    dd.release_caches()  # _PENDING is process-global; start from empty
     docs = load_table(spark, SF_CORRECT, "documents")
-    out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
-    assert not out.is_cached  # fixture inputs are KBs, floor is 256 MiB
-    assert not dd._PENDING
+    # fixture inputs are KBs, floor is 256 MiB
+    assert _gate(docs.select("doc_id"), docs) == (False, False, 0)
 
 
 def test_gate_open_above_floor(spark, monkeypatch):
     docs = load_table(spark, SF_CORRECT, "documents")
     monkeypatch.setattr(dd, "_PERSIST_INPUT_FLOOR", 1)  # any real file opens it
-    out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
-    try:
-        assert out.is_cached
-        assert dd._PENDING  # tracked for _scoped adoption like any persist
-    finally:
-        dd.release_caches()
+    assert _gate(docs.select("doc_id"), docs) == (True, True, 1)
 
 
 def test_gate_closed_for_sourceless_frames(spark):
     # in-memory fixtures have no input files: nothing to save by caching
     df = spark.createDataFrame([(1,)], "x BIGINT")
-    out = dd._persist_if_input_ge(df.select("x"), df)
-    assert not out.is_cached
-    assert not dd._PENDING
+    assert _gate(df.select("x"), df) == (False, False, 0)
 
 
 def test_hybrid_bounded_shape_equals_lean_shape(spark, monkeypatch):

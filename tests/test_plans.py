@@ -586,3 +586,26 @@ def test_vocab_coverage_top_k_without_global_sort(spark):
     documented here."""
     plan = formatted_plan(_df(spark, "vocab_coverage_curve"))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name, table, scans",
+    [
+        ("minhash_lsh_recall_check", "documents", 2),
+        ("simhash_exact_dup_check", "documents", 3),
+        ("hybrid_rrf_fusion", "documents", 2),
+        ("ann_recall_check", "embeddings", 3),
+    ],
+)
+def test_operator_caches_outlive_derived_plans(spark, name, table, scans):
+    """Operator-internal caches live as long as the plan the builder
+    returns, however the builder derived it from the operator's result.
+    A cache released early (an intermediate operator frame dropped and
+    collected before the plan runs) turns each of its reads back into a
+    raw scan of the source table, so the pinned counts grow."""
+    import gc
+
+    df = all_specs()[name].builder(spark, SF_CORRECT)
+    gc.collect()
+    plan = formatted_plan(df)
+    assert plan.count(f"Location: InMemoryFileIndex [file:{SF_CORRECT}/{table}") == scans

@@ -117,7 +117,7 @@ def _record(payload: dict) -> None:
 
 
 def test_results_identical_under_retries_and_relayout(rspark):
-    from mapreduce_paradigm_spark.operators.dedup import release_caches
+    from mapreduce_paradigm_spark.lifetime import release_caches
 
     docs = rspark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     out = {}

@@ -6,6 +6,7 @@
 2. topk_cosine's chunked query-side collect (n_queries past
    _TOPK_QUERY_CHUNK) partitions the query set across per-chunk corpus
    passes — the merged result must equal the single-pass result exactly.
+   A shared state does not bypass that bound.
 3. rank_micros ranks by HALF_UP integer micros with ties to the lowest
    neighbor id — _half_up_micros must agree with Spark's round(x*1e6, 0)
    on adversarial values, and the selected argmax must follow the rounded
@@ -14,9 +15,13 @@
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.operators.similarity import (
     AnnSharedState,
     _half_up_micros,
@@ -38,7 +43,6 @@ def _rows(df):
 def test_shared_state_is_output_invisible(spark):
     emb = load_table(spark, SF_CORRECT, "embeddings")
     queries = emb.filter(F.col("vec_id") % 25 == 0)
-    sh = AnnSharedState(emb, queries)
     cases = [
         (lambda s: topk_cosine(emb, queries, k=5, shared=s)),
         (lambda s: ivf_topk_cosine(emb, queries, k=5, nlist=8, nprobe=4, shared=s)),
@@ -47,8 +51,48 @@ def test_shared_state_is_output_invisible(spark):
         (lambda s: lsh_topk_cosine(emb, queries, dim=64, k=5, nbits=8, multiprobe=2, shared=s)),
         (lambda s: lsh_topk_cosine(emb, queries, dim=64, k=5, nbits=8, multiprobe=0, shared=s)),
     ]
-    for build in cases:
-        assert _rows(build(sh)) == _rows(build(None))
+    with AnnSharedState(emb, queries) as sh:
+        for build in cases:
+            assert _rows(build(sh)) == _rows(build(None))
+
+
+def _cached(df) -> bool:
+    return df.storageLevel != StorageLevel.NONE
+
+
+def test_shared_state_outside_a_scope_releases_on_exit(spark):
+    # built outside any cache scope, the state owns its persisted corpus
+    # frames: they survive the tier results that read them and are
+    # released when the with-block exits
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    with AnnSharedState(emb, queries) as sh:
+        _rows(topk_cosine(emb, queries, k=5, shared=sh))
+        gc.collect()
+        unit = sh.unit_corpus()
+        lsh = sh.lsh_corpus(64, 8, 7)
+        assert _cached(unit) and _cached(lsh)
+    assert not _cached(unit) and not _cached(lsh)
+
+
+def test_shared_state_inside_a_scope_belongs_to_the_scope(spark):
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    frames = []
+
+    @lifetime.scoped
+    def build():
+        sh = AnnSharedState(emb, queries)
+        out = topk_cosine(emb, queries, k=5, shared=sh).select("q_id")
+        frames.append(sh.unit_corpus())
+        return out
+
+    out = build()
+    gc.collect()
+    assert _cached(frames[0])  # the builder's result still owns it
+    del out
+    gc.collect()
+    assert not _cached(frames[0])
 
 
 def test_shared_state_rejects_foreign_frames(spark):
@@ -70,6 +114,16 @@ def test_topk_chunked_queries_equal_single_pass(spark, monkeypatch):
     monkeypatch.setattr(sim, "_TOPK_QUERY_CHUNK", 7)  # force ~15 chunks
     chunked = _rows(topk_cosine(emb, queries, k=5, n_queries=nq))
     assert chunked == single
+
+    # a shared state supplies the corpus only: past the chunk bound the
+    # query side is still collected chunk by chunk, never all at once
+    def _single_collect(self):
+        raise AssertionError("shared.qrows() collected every query at once")
+
+    monkeypatch.setattr(sim.AnnSharedState, "qrows", _single_collect)
+    with sim.AnnSharedState(emb, queries) as sh:
+        shared = _rows(topk_cosine(emb, queries, k=5, n_queries=nq, shared=sh))
+    assert shared == single
 
 
 def test_half_up_micros_matches_spark_round(spark):

@@ -117,8 +117,8 @@ def test_dfcap_beats_uncapped_on_template_skew(spark, skew_dir):
     from mapreduce_paradigm_spark.operators.dedup import (
         jaccard_pairs,
         jaccard_pairs_prefix_filter,
-        release_caches,
     )
+    from mapreduce_paradigm_spark.lifetime import release_caches
 
     docs = spark.read.parquet(os.path.join(skew_dir, "docs"))
     t_capped = _timed_noop(jaccard_pairs(docs, k=3, threshold=0.5, max_shingle_df=50))
