@@ -2843,14 +2843,16 @@ def jaccard_pairs_prefix_filter(
     stream against a df table — one fewer full-stream shuffle), prefix
     postings pair-explode into candidates, and verification is an
     array_intersect on the two (already grouped) shingle sets plus the
-    PPJoin length filter — no re-scan of the corpus.
+    PPJoin length filter — no re-scan of the corpus. The ranked sets are
+    the one persisted frame: candidates and both verify sides read them,
+    while the postings have no reader but the ranked sets.
     """
     # ONE grouped pass gives both shingle df AND the posting lists; per-doc
     # ranked sets are rebuilt from the postings explode — no (doc, shingle)
     # × df join, one fewer full-stream shuffle than the naive 4-stage plan.
-    postings = lifetime.persist(shingle_postings(docs, k, text_col))
     docsets = (
-        postings.select("sid", "df", F.explode("ds").alias("doc_id"))
+        shingle_postings(docs, k, text_col)
+        .select("sid", "df", F.explode("ds").alias("doc_id"))
         .groupBy("doc_id")
         .agg(
             F.array_sort(F.collect_list(F.struct("df", "sid"))).alias(

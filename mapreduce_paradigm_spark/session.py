@@ -4,7 +4,8 @@ Defaults encode the 100 TB design posture (SURVEY.md §7 M5):
 
 - AQE on, with partition coalescing and skew-join splitting — the runtime
   generalization of the reference's dynamic work-queue scheduling
-  (reference ``src/main.cpp:216-225``, ``README.md:42-44``).
+  (reference ``src/main.cpp:216-225``, ``README.md:42-44``). Persisted
+  frames are coalesced by the same rule as every other shuffle.
 - Explicit shuffle parallelism (sized to the cluster, AQE coalesces down).
 - Arrow enabled for the few pandas-UDF escape hatches.
 - UTC session timezone so timestamp semantics are stable across hosts.
@@ -20,6 +21,15 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # let AQE coalesce the shuffles inside a persisted plan too: with this
+    # off (Spark's default) a cached frame keeps all
+    # spark.sql.shuffle.partitions partitions, and every stage that reads
+    # it runs one task per partition however small the frame is. Traced
+    # perfbench corpus_pipeline on local[4]: 416 -> 43 tasks per pass.
+    # A reader that relied on the cache's hash partitioning may add an
+    # exchange instead: 2 of the 404 registry builders do at sf0.01, and
+    # both still ran faster with this on at sf0.1.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.files.maxPartitionBytes": "128m",
@@ -43,7 +53,8 @@ DEFAULT_CONF: dict[str, str] = {
     # comparable across rounds; override via $SPARK_GRAFT_SHUFFLE_PARTITIONS
     # (see get_spark) for cluster runs, where the right value is
     # sized so post-shuffle partitions land in the 100 MB-1 GB band
-    # (guide: ~total_shuffle_bytes / 256 MB) and AQE coalesces down.
+    # (guide: ~total_shuffle_bytes / 256 MB) and AQE coalesces down,
+    # persisted plans included (see canChangeCachedPlanOutputPartitioning).
     # A constant tuned to either the laptop or the cluster is the
     # documented footgun; the env override is the deployment knob.
     "spark.sql.shuffle.partitions": "32",

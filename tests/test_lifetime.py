@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import gc
 import threading
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -164,3 +165,42 @@ def test_direct_similarity_calls_own_their_broadcasts(spark, monkeypatch):
     del exact, ivf
     gc.collect()
     assert all(any(h is b for h in released) for b in made)
+
+
+def test_reads_of_a_persisted_aggregate_are_coalesced(spark):
+    """AQE coalesces the shuffle inside a persisted plan, so an action
+    over a small cached aggregate runs fewer tasks than
+    ``spark.sql.shuffle.partitions`` (one per partition without it)."""
+    import uuid
+
+    sc = spark.sparkContext
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_shuffle > 1
+
+    @lifetime.scoped
+    def tasks_over_cached_aggregate() -> int:
+        flags = lifetime.persist(
+            load_table(spark, SF_CORRECT, "lineitem")
+            .groupBy("l_returnflag")
+            .agg(F.count("*").alias("n"))
+        )
+        flags.count()  # fills the cache
+        group = f"cached-read-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            flags.filter("n > 0").collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
+        tracker = sc.statusTracker()
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        assert jobs
+        # completed, not numTasks: the job also lists the skipped stage
+        # that computed the cached shuffle
+        return sum(
+            tracker.getStageInfo(s).numCompletedTasks
+            for j in jobs
+            for s in j.stageIds
+        )
+
+    assert tasks_over_cached_aggregate() < n_shuffle
