@@ -1,10 +1,11 @@
 """Connected components over a pair graph — dedup CLUSTERING.
 
 Near-dup detection yields pairs; the pipeline action (keep one doc per
-duplicate group) needs the transitive closure: connected components. This
-is the engine's one genuinely ITERATIVE algorithm: a driver loop over
-pure-DataFrame rounds with per-round persist/unpersist so lineage (and
-task binaries) don't grow with iterations.
+duplicate group) needs the transitive closure: connected components.
+Every operator here is a driver loop of pure-DataFrame rounds run by
+``rounds.fixpoint``: one eager checkpoint per round keeps lineage (and
+task binaries) flat and carries the round's convergence metric, so the
+driver only ever sees scalars. ``rounds`` states the fault bound.
 
 Two interchangeable implementations (identical output contract):
 
@@ -24,9 +25,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark.operators.rounds import (
+    ConvergenceError,
+    fixpoint,
+    observed_checkpoint,
+)
 
-class ConvergenceError(RuntimeError):
-    """Iterative algorithm hit max_iter before its fixpoint."""
+
+def _count() -> list:
+    return [F.count(F.lit(1)).alias("n")]
+
+
+def _propagate_min(edges: DataFrame, src: str, dst: str):
+    """One min-label round over ``(v, label)`` states: every vertex takes
+    the least of its own label and the labels arriving along ``src ->
+    dst`` edges. The new state keeps the old label as ``_prev``, so
+    ``_changed()`` counts the labels the round lowered — exact for any
+    id type, and 0 exactly at the fixpoint since labels only decrease."""
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        msgs = edges.join(labels, edges[src] == labels["v"]).select(
+            F.col(dst).alias("v"), "label"
+        )
+        # min over {self label} ∪ {neighbor labels} in ONE aggregation: the
+        # self row rides the union, so no separate left join back onto
+        # labels — one fewer shuffle per round than the join+groupBy+join
+        # form (measured 6.0 s → 4.4 s on the sf0.1 bench fixture)
+        return (
+            labels.select("v", "label", F.col("label").alias("_prev"))
+            .unionByName(msgs, allowMissingColumns=True)
+            .groupBy("v")
+            .agg(F.min("label").alias("label"), F.max("_prev").alias("_prev"))
+        )
+
+    return propagate
+
+
+def _changed() -> list:
+    return [F.count_if(F.col("label") != F.col("_prev")).alias("changed")]
+
+
+def _none_changed(m: dict, *_) -> bool:
+    return m["changed"] == 0
 
 
 def connected_components(
@@ -40,32 +80,15 @@ def connected_components(
     the minimum doc_id reachable. Deterministic.
 
     Min-label propagation: every vertex repeatedly adopts the smallest
-    label among itself and its neighbors; fixpoint = components. The
-    convergence check is one small action per round (count of changed
-    labels) — the driver only ever sees a scalar.
+    label among itself and its neighbors; fixpoint = components, detected
+    when a round changes no label.
 
     Raises ``ConvergenceError`` if ``max_iter`` rounds pass without the
     fixpoint: label propagation moves one hop per round, so a component
     whose diameter exceeds ``max_iter`` would otherwise be silently split
     into several clusters. Use ``connected_components_star`` for
     high-diameter graphs (O(log² n) rounds).
-
-    Convergence detection: labels only ever DECREASE (least of self and
-    neighbors). For NUMERIC ids the fixpoint is reached exactly when
-    Σ component is unchanged — one cheap aggregate on the just-checkpointed
-    labels. For non-numeric ids (string doc ids) Σ is undefined — non-ANSI
-    Spark would return NULL and NULL == NULL would declare convergence
-    after round 1, silently splitting components — so those fall back to a
-    changed-label count join per round (same scalar-only driver contract).
-
-    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
-    executor fails the next action on the result instead of recomputing
-    it. The final round's checkpoint blocks are not released when the
-    result is dropped; the ContextCleaner reaps them later (at sf0.01, 2
-    persisted RDDs remain after ``dedup_clusters``' result is dropped).
     """
-    from pyspark.sql.types import NumericType
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # undirected: both directions once. ``edges_unique`` asserts the input
     # is already a set of asymmetric pairs (src < dst, no duplicates) — the
@@ -83,71 +106,27 @@ def connected_components(
     # actual work on the small label frontier. The checkpoint flattens the
     # plan to the materialized blocks once.
     sym = sym.localCheckpoint(eager=True)
-    # initialize at min(self, neighbors) — exactly the state the old
-    # identity init reached AFTER its first round, for the same one-shuffle
-    # cost the identity init paid on its distinct(): one full
-    # join+union+agg+checkpoint round (and its driver action) is skipped
+    # initialize at min(self, neighbors) — the state an identity init
+    # reaches after its first round, for the one shuffle the identity
+    # init would pay on its distinct()
     labels = (
         sym.groupBy("a")
         .agg(F.min("b").alias("_mb"))
         .select(
             F.col("a").alias("v"),
-            F.least(F.col("a"), F.col("_mb")).alias("component"),
+            F.least(F.col("a"), F.col("_mb")).alias("label"),
         )
-        .persist()
     )
-    numeric_ids = isinstance(labels.schema["component"].dataType, NumericType)
-    label_sum = labels.agg(F.sum("component")).collect()[0][0] if numeric_ids else None
-
-    converged = False
-    for _ in range(max_iter):
-        # min over {self label} ∪ {neighbor labels} in ONE aggregation: the
-        # self row rides the union, so no separate left join back onto
-        # labels — one fewer shuffle per round than the join+groupBy+join
-        # form (measured 6.0 s → 4.4 s on the sf0.1 bench fixture).
-        msgs = sym.join(labels, sym["b"] == labels["v"]).select(
-            F.col("a").alias("v"), "component"
-        )
-        # localCheckpoint (not persist): each round's labels nest the prior
-        # round's join — persist truncates re-execution but not the logical
-        # plan, whose tree-string generation alone OOMs the driver past ~10
-        # rounds. Checkpointing cuts lineage to the materialized blocks.
-        # Lazy (eager=False): the convergence action below materializes it,
-        # so each round runs ONE job, not a checkpoint job plus an action.
-        new_labels = (
-            labels.select("v", "component")
-            .unionByName(msgs)
-            .groupBy("v")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=False)
-        )
-        if numeric_ids:
-            new_sum = new_labels.agg(F.sum("component")).collect()[0][0]
-            done = new_sum == label_sum
-            label_sum = new_sum
-        else:
-            done = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "v")
-                .filter(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-                == 0
-            )
-        labels.unpersist()
-        labels = new_labels
-        if done:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        labels.unpersist()
-        raise ConvergenceError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(component diameter > max_iter); use connected_components_star "
-            f"or raise max_iter"
-        )
-    return labels.select(F.col("v").alias("doc_id"), "component")
+    labels = fixpoint(
+        labels,
+        _propagate_min(sym, "a", "b"),
+        max_iter,
+        metrics=_changed(),
+        done=_none_changed,
+    )
+    return labels.select(
+        F.col("v").alias("doc_id"), F.col("label").alias("component")
+    )
 
 
 def connected_components_star(
@@ -169,15 +148,7 @@ def connected_components_star(
 
     Both preserve connectivity and monotonically hang vertices below
     smaller ids; the fixpoint is a star forest whose centers are the
-    component minima — read labels straight off the final edges. The
-    convergence action per round is one scalar (edge-set change count).
-
-    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
-    executor fails the next action on the result instead of recomputing
-    it. The final round's checkpoint blocks are not released when the
-    result is dropped; the ContextCleaner reaps them later (at sf0.01, 5
-    more persisted RDDs remain after ``dedup_clusters_star``' result is
-    dropped).
+    component minima — read labels straight off the final edges.
     """
     # localCheckpoint (not persist) the input projection: it feeds BOTH the
     # canonical edge set and the final vertex list, so without it an
@@ -198,7 +169,6 @@ def connected_components_star(
     # canonical form already — the distinct would re-shuffle for nothing
     if not edges_unique:
         cur = cur.distinct()
-    cur = cur.localCheckpoint(eager=False)
 
     def _star(edges_sl: DataFrame, large: bool) -> DataFrame:
         # neighborhoods as (u, v) both directions; m = min over N(u) ∪ {u}
@@ -231,40 +201,23 @@ def connected_components_star(
             F.col("m").alias("s"), F.col("v").alias("g")
         )
 
-    n_cur = cur.count()
-    converged = False
-    for _ in range(max_iter):
-        # localCheckpoint (not persist): each round nests two star rewrites,
-        # so the LOGICAL plan doubles per round — persist truncates
-        # re-execution but not the plan tree, and plan-string generation
-        # alone would OOM the driver by round ~10. Checkpointing cuts
-        # lineage to the materialized blocks (on a cluster, use
-        # spark.checkpoint to reliable storage for fault tolerance).
-        nxt = (
-            _star(_star(cur, large=True), large=False)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    def star_round(edges_sl: DataFrame) -> DataFrame:
+        return _star(_star(edges_sl, large=True), large=False).distinct()
+
+    def unchanged(m: dict, prev: dict, new: DataFrame, old: DataFrame) -> bool:
         # exact set-equality at scalar cost: both sides are distinct sets,
-        # so |nxt| == |cur| plus nxt ⊆ cur (anti-join, take-1 early exit)
-        # implies equality — replaces the old two-sided exceptAll (two full
-        # shuffle aggregations per round); when sizes differ the anti-join
-        # never runs. (A structural star-forest test on nxt alone would
-        # detect the fixpoint one round earlier, but its union+groupBy
-        # costs more per round than the saved confirming round — measured
-        # 4.1 s vs 3.0 s on the sf0.1 bench fixture.)
-        n_nxt = nxt.count()
-        done = n_nxt == n_cur and nxt.join(cur, ["s", "g"], "left_anti").isEmpty()
-        cur.unpersist()
-        cur, n_cur = nxt, n_nxt
-        if done:
-            converged = True
-            break
-    if not converged:
-        cur.unpersist()
-        raise ConvergenceError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+        # so equal sizes plus new ⊆ old (anti-join, take-1 early exit)
+        # implies equality; the anti-join runs only when the sizes match.
+        # (A structural star-forest test on new alone would detect the
+        # fixpoint one round earlier, but its union+groupBy costs more per
+        # round than the saved confirming round — measured 4.1 s vs 3.0 s
+        # on the sf0.1 bench fixture.)
+        return (
+            m["n"] == prev.get("n")
+            and new.join(old, ["s", "g"], "left_anti").isEmpty()
         )
+
+    cur = fixpoint(cur, star_round, max_iter, metrics=_count(), done=unchanged)
     # star forest: every non-center vertex g hangs off its component min s;
     # centers label themselves
     labels = cur.select(F.col("g").alias("doc_id"), F.col("s").alias("component")).unionByName(
@@ -276,13 +229,9 @@ def connected_components_star(
         .unionByName(e.select(F.col("b").alias("doc_id")))
         .distinct()
     )
-    out = verts.join(labels, "doc_id", "left").select(
+    return verts.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("component", F.col("doc_id")).alias("component")
     )
-    result = out.localCheckpoint(eager=True)  # pin before releasing inputs
-    cur.unpersist()
-    e.unpersist()  # releases the input checkpoint's blocks
-    return result
 
 
 def kcore_vertices(
@@ -306,25 +255,15 @@ def kcore_vertices(
     degeneracy ordering's longest chain), typically tens even on web-scale
     graphs; ``max_iter`` guards pathological chains with a loud
     ``ConvergenceError`` rather than returning a non-core silently.
-    ``localCheckpoint`` per round keeps the logical plan flat (same
-    rationale as ``connected_components``).
-
-    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
-    executor fails the next action on the result instead of recomputing
-    it. The final round's checkpoint blocks are not released when the
-    result is dropped; the ContextCleaner reaps them later.
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    n_edges = e.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            return e.sparkSession.createDataFrame([], "v long, deg long")
+
+    def peel(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.col("a").alias("v"))
             .unionByName(e.select(F.col("b").alias("v")))
@@ -332,22 +271,24 @@ def kcore_vertices(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("v")
-        nxt = (
+        return (
             e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_edges:
-            return (
-                nxt.select(F.col("a").alias("v"))
-                .unionByName(nxt.select(F.col("b").alias("v")))
-                .groupBy("v")
-                .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-            )
-        e, n_edges = nxt, n_nxt
-    raise ConvergenceError(f"kcore did not stabilize in {max_iter} rounds")
+
+    def stable(m: dict, prev: dict, *_) -> bool:
+        # peeling only removes edges, so an unchanged count is an
+        # unchanged edge set; an empty set is its own next round
+        return m["n"] in (0, prev.get("n"))
+
+    core = fixpoint(e, peel, max_iter, metrics=_count(), done=stable)
+    return (
+        core.select(F.col("a").alias("v"))
+        .unionByName(core.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    )
 
 
 def strongly_connected_components(
@@ -384,51 +325,42 @@ def strongly_connected_components(
     Scale shape: every step is a key-partitioned join + min-aggregate on
     the (shrinking) remaining graph — no transitive closure, no pair
     materialization; the driver only ever sees convergence scalars.
-    Per-round localCheckpoint flattens lineage exactly as the CC loops
-    do. Raises ``ConvergenceError`` on any unconverged inner fixpoint or
+    Raises ``ConvergenceError`` on any unconverged inner fixpoint or
     leftover vertices, never returning a silently wrong labeling.
-
-    Fault bound: ``localCheckpoint`` blocks have no lineage, so losing an
-    executor fails the next action on the result instead of recomputing
-    it. The final round's checkpoint blocks are not released when the
-    result is dropped; the ContextCleaner reaps them later.
     """
     v0 = vertices.columns[0]
-    remaining = vertices.select(F.col(v0).alias("node")).distinct()
-    remaining = remaining.localCheckpoint(eager=True)
+    remaining, left = observed_checkpoint(
+        vertices.select(F.col(v0).alias("node")).distinct(), _count()
+    )
     e = (
         edges.select(F.col(src).alias("ea"), F.col(dst).alias("eb"))
         .filter(F.col("ea") != F.col("eb"))
         .distinct()
         .localCheckpoint(eager=True)
     )
+
+    def collect(reached: DataFrame) -> DataFrame:
+        # e_color: this peel's within-color edges, bound below
+        msgs = e_color.join(
+            reached.select(F.col("node").alias("eb"), "f"), ["eb", "f"]
+        ).select(F.col("ea").alias("node"), "f")
+        return reached.unionByName(msgs).distinct()
+
+    def grown_none(m: dict, prev: dict, *_) -> bool:
+        return m["n"] == prev.get("n")
+
     parts: list[DataFrame] = []
     for _ in range(max_peel):
-        n_rem = remaining.count()
-        if n_rem == 0:
+        if left["n"] == 0:
             break
         # -- 1. forward min-label propagation to fixpoint ---------------------
-        f = remaining.select("node", F.col("node").alias("f"))
-        f_sum = f.agg(F.sum("f")).collect()[0][0]
-        for _it in range(max_prop):
-            msgs = e.join(f, e["ea"] == f["node"]).select(
-                F.col("eb").alias("node"), "f"
-            )
-            new_f = (
-                f.unionByName(msgs)
-                .groupBy("node")
-                .agg(F.min("f").alias("f"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = new_f.agg(F.sum("f")).collect()[0][0]
-            f, done = new_f, new_sum == f_sum
-            f_sum = new_sum
-            if done:
-                break
-        else:
-            raise ConvergenceError(
-                f"scc forward coloring did not converge in {max_prop} rounds"
-            )
+        f = fixpoint(
+            remaining.select(F.col("node").alias("v"), F.col("node").alias("label")),
+            _propagate_min(e, "ea", "eb"),
+            max_prop,
+            metrics=_changed(),
+            done=_none_changed,
+        ).select(F.col("v").alias("node"), F.col("label").alias("f"))
         # labels of both endpoints; within-color edges only (see step 2)
         fa = f.select(F.col("node").alias("ea"), F.col("f").alias("fa"))
         fb = f.select(F.col("node").alias("eb"), F.col("f").alias("fb"))
@@ -440,32 +372,18 @@ def strongly_connected_components(
             .localCheckpoint(eager=True)
         )
         # -- 2. backward within-color reachability from the pivots ------------
-        reached = f.filter(F.col("node") == F.col("f")).select("node", "f")
-        r_cnt = reached.count()
-        for _it in range(max_prop):
-            msgs = e_color.join(
-                reached.select(F.col("node").alias("eb"), "f"), ["eb", "f"]
-            ).select(F.col("ea").alias("node"), "f")
-            new_reached = (
-                reached.unionByName(msgs).distinct().localCheckpoint(eager=False)
-            )
-            new_cnt = new_reached.count()
-            reached, done = new_reached, new_cnt == r_cnt
-            r_cnt = new_cnt
-            if done:
-                break
-        else:
-            raise ConvergenceError(
-                f"scc backward collection did not converge in {max_prop} rounds"
-            )
-        scc = reached.select("node", F.col("f").alias("scc_id")).localCheckpoint(
-            eager=True
+        reached = fixpoint(
+            f.filter(F.col("node") == F.col("f")),
+            collect,
+            max_prop,
+            metrics=_count(),
+            done=grown_none,
         )
+        scc = reached.select("node", F.col("f").alias("scc_id"))
         parts.append(scc)
         # -- 3. peel ----------------------------------------------------------
-        remaining = (
-            remaining.join(scc.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
+        remaining, left = observed_checkpoint(
+            remaining.join(scc.select("node"), "node", "left_anti"), _count()
         )
         e = (
             e.join(remaining.select(F.col("node").alias("ea")), "ea", "left_semi")
@@ -474,7 +392,7 @@ def strongly_connected_components(
             .localCheckpoint(eager=True)
         )
     else:
-        if remaining.count() > 0:
+        if left["n"] > 0:
             raise ConvergenceError(
                 f"scc peeling left vertices after {max_peel} rounds"
             )

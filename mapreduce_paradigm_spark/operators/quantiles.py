@@ -1,137 +1,105 @@
 """Exact distributed order statistics via iterative histogram refinement.
 
 ``percentile`` / sort-based medians hold per-group value buffers (exact but
-memory-bound) and a global sort is a full shuffle. This operator finds the
-EXACT k-th smallest of an integer-valued column in O(log_B(range)) passes:
-each pass histograms the remaining candidate range into B buckets, the
-driver receives only B counts, picks the bucket containing rank k, and
-narrows. For 64-bit micro-unit ranges (~10^12) and B=1024, three passes
-settle any rank — each pass one scan + one tiny aggregate, no shuffle of
-data rows, no driver-side values beyond B counts. This is the classic
+memory-bound) and a global sort is a full shuffle. This operator finds
+EXACT k-th smallest values of an integer-valued column in
+O(log_B(range)) passes: each pass histograms every open candidate range
+into B buckets, the driver receives only the counts, picks the bucket
+holding each wanted rank, and narrows. Every requested rank of every
+group is refined in the same pass, so both middle ranks of a median cost
+one pass sequence, not two. With B = 1024, four passes settle a 10^12
+micro-unit range — each pass one scan + one tiny aggregate, no shuffle of
+data rows, no driver-side values beyond the counts. This is the classic
 "median of a terabyte" construction (distributed selection).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Mapping
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def kth_smallest_long(df: DataFrame, col: str, k: int, buckets: int = 1024) -> int:
-    """Exact k-th smallest (1-based) of a LONG column. Driver work per
-    pass: ``buckets`` counts; passes: ceil(log_buckets(range))."""
-    lo_hi = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    lo, hi = lo_hi["lo"], lo_hi["hi"]
-    if lo is None:
-        raise ValueError("kth_smallest_long on empty input")
-    remaining_k = k
-    while lo < hi:
-        # bucket width >= 1 so the range strictly narrows every pass
-        width = max(1, (hi - lo) // buckets + 1)
-        c = F.col(col)
-        hist = (
-            df.filter((c >= lo) & (c <= hi))
-            .groupBy(((c - F.lit(lo)) / F.lit(width)).cast("long").alias("b"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        counts = {r["b"]: r["n"] for r in hist}
-        acc = 0
-        for b in sorted(counts):
-            if acc + counts[b] >= remaining_k:
-                remaining_k -= acc
-                lo2 = lo + b * width
-                hi2 = min(hi, lo2 + width - 1)
-                lo, hi = lo2, hi2
-                break
-            acc += counts[b]
-        else:  # pragma: no cover - rank beyond row count
-            raise ValueError("rank exceeds row count in range")
-    return lo
+_BUCKETS = 1024
 
 
-def exact_median_long(df: DataFrame, col: str, buckets: int = 1024) -> float:
-    """Exact median of a LONG column: both middle order statistics via the
-    histogram-refinement selection, averaged for even counts. Equivalent to
-    ``percentile(col, 0.5)`` without per-group buffers or a global sort."""
-    n = df.filter(F.col(col).isNotNull()).count()
-    if n == 0:
-        raise ValueError("exact_median_long on empty input")
-    k1 = (n + 1) // 2
-    k2 = n // 2 + 1
-    v1 = kth_smallest_long(df, col, k1, buckets)
-    v2 = v1 if k2 == k1 else kth_smallest_long(df, col, k2, buckets)
-    return (v1 + v2) / 2
-
-
-def grouped_kth_smallest_long(
+def kth_smallest_long(
     df: DataFrame,
-    group_col: str,
     value_col: str,
-    ranks: dict[object, int],
-    buckets: int = 64,
-) -> dict[object, int]:
-    """Exact per-group k-th smallest for EVERY group simultaneously.
+    ranks: Iterable[int] | Mapping[object, Iterable[int]],
+    group_col: str | None = None,
+) -> dict:
+    """Exact k-th smallest (1-based, nulls ignored) values of a LONG
+    column: ``{rank: value}`` for every rank in ``ranks``; with
+    ``group_col``, ``ranks`` maps each group to its ranks and the result
+    is ``{group: {rank: value}}``.
 
-    The grouped generalization of ``kth_smallest_long``: each pass computes
-    ONE (group, bucket) histogram for all still-unsettled groups, the driver
-    narrows each group's candidate range independently, and settled groups
-    drop out of the filter. Driver state is O(groups); per pass the driver
-    receives at most ``groups * buckets`` counts — the knob to mind when
-    group counts grow (B=64 keeps a 10⁵-group pass at ~6M tiny rows; beyond
-    that, partition the group domain and run cohorts). Passes:
-    ceil(log_buckets(range)) — 7 for a 10¹²-micro range at B=64. Unlike
-    ``percentile()``'s per-group value buffers this never materializes a
-    group's values anywhere.
+    Open candidate ranges are either equal or disjoint (each is a bucket
+    of its parent range), so targets sharing a range share one slot and
+    a row falls in at most one slot. A pass is ONE filter + aggregate
+    over all slots, written as a CASE over the slot ranges: driver state
+    and plan size grow with the number of open slots (groups × distinct
+    ranges), and per pass the driver receives at most ``slots × 1024``
+    counts.
     """
-    g, c = F.col(group_col), F.col(value_col)
+    wanted = ranks if group_col else {None: ranks}
+    c, keys = F.col(value_col), [group_col] if group_col else []
     bounds = {
-        r[0]: (r[1], r[2])
-        for r in df.groupBy(g)
-        .agg(F.min(c).alias("lo"), F.max(c).alias("hi"))
-        .collect()
+        (r[group_col] if group_col else None): (r["lo"], r["hi"])
+        for r in df.groupBy(*keys).agg(F.min(c).alias("lo"), F.max(c).alias("hi")).collect()
     }
-    state = {k: (bounds[k][0], bounds[k][1], ranks[k]) for k in ranks}
-    result: dict[object, int] = {}
-    for k, (lo, hi, _) in list(state.items()):
-        if lo == hi:
-            result[k] = lo
-            del state[k]
-    while state:
-        spark = df.sparkSession
-        rows = [(k, lo, hi, max(1, (hi - lo) // buckets + 1)) for k, (lo, hi, _) in state.items()]
-        rdf = spark.createDataFrame(
-            rows, f"{group_col} LONG, _lo LONG, _hi LONG, _w LONG"
-        ) if isinstance(rows[0][0], int) else spark.createDataFrame(
-            rows, f"{group_col} STRING, _lo LONG, _hi LONG, _w LONG"
-        )
+    # open targets: (group, rank) -> (lo, hi, rank within [lo, hi])
+    open_: dict = {}
+    found: dict = {}
+    for g, rs in wanted.items():
+        lo, hi = bounds.get(g, (None, None))
+        if lo is None:
+            raise ValueError(f"kth_smallest_long: no values for group {g!r}")
+        for k in rs:
+            if lo == hi:
+                found[g, k] = lo
+            else:
+                open_[g, k] = (lo, hi, k)
+    while open_:
+        slots = list({(g, lo, hi) for (g, _), (lo, hi, _) in open_.items()})
+        # width >= 1 so every range strictly narrows each pass
+        widths = [max(1, (hi - lo) // _BUCKETS + 1) for _, lo, hi in slots]
+        key = None
+        for i, ((g, lo, hi), w) in enumerate(zip(slots, widths)):
+            cond = (c >= lo) & (c <= hi)
+            if group_col:
+                cond = cond & (F.col(group_col) == g)
+            # exact integer bucket (a double division would misplace values
+            # past 2^53 relative to the driver's integer bucket bounds)
+            bucket = F.expr(f"{i * _BUCKETS} + (`{value_col}` - ({lo})) DIV {w}")
+            key = F.when(cond, bucket) if key is None else key.when(cond, bucket)
         hist = (
-            df.join(F.broadcast(rdf), group_col)
-            .filter((c >= F.col("_lo")) & (c <= F.col("_hi")))
-            .groupBy(g, ((c - F.col("_lo")) / F.col("_w")).cast("long").alias("_b"))
-            .agg(F.count(F.lit(1)).alias("_n"))
+            df.select(key.alias("_k"))
+            .filter(F.col("_k").isNotNull())
+            .groupBy("_k")
+            .count()
             .collect()
         )
-        per_group: dict[object, dict[int, int]] = {}
+        counts: list[dict[int, int]] = [{} for _ in slots]
         for r in hist:
-            per_group.setdefault(r[0], {})[r["_b"]] = r["_n"]
-        for k in list(state):
-            lo, hi, want = state[k]
-            width = max(1, (hi - lo) // buckets + 1)
+            i, b = divmod(r["_k"], _BUCKETS)
+            counts[i][b] = r["count"]
+        index = {s: i for i, s in enumerate(slots)}
+        for (g, k), (lo, hi, want) in list(open_.items()):
+            i = index[g, lo, hi]
             acc = 0
-            counts = per_group.get(k, {})
-            for b in sorted(counts):
-                if acc + counts[b] >= want:
-                    lo2 = lo + b * width
-                    hi2 = min(hi, lo2 + width - 1)
-                    want -= acc
+            for b in sorted(counts[i]):
+                if acc + counts[i][b] >= want:
+                    lo2 = lo + b * widths[i]
+                    hi2 = min(hi, lo2 + widths[i] - 1)
                     if lo2 == hi2:
-                        result[k] = lo2
-                        del state[k]
+                        found[g, k] = lo2
+                        del open_[g, k]
                     else:
-                        state[k] = (lo2, hi2, want)
+                        open_[g, k] = (lo2, hi2, want - acc)
                     break
-                acc += counts[b]
+                acc += counts[i][b]
             else:
-                raise ValueError(f"rank exceeds row count for group {k!r}")
-    return result
+                raise ValueError(f"rank {k} exceeds the row count of group {g!r}")
+    out = {g: {k: found[g, k] for k in rs} for g, rs in wanted.items()}
+    return out if group_col else out[None]

@@ -18,8 +18,49 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreduce_paradigm_spark import lifetime
+from mapreduce_paradigm_spark.operators.rounds import fixpoint
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
+
+
+def citation_edges(docs, a: str = "a", b: str = "b"):
+    """The deterministic 3-out citation graph over ``docs(node)``: node
+    ``a`` cites ``(a * 31 + k) mod n_docs`` for k = 1, 2, 3. Self-loops
+    and duplicate edges are kept; each caller filters, dedups and orients
+    for its own algorithm (the oracles spell the same graph in SQL)."""
+    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
+    return docs.crossJoin(F.broadcast(ncnt)).select(
+        F.col("node").alias(a),
+        F.explode(
+            F.array(
+                *[
+                    F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
+                    for k in (1, 2, 3)
+                ]
+            )
+        ).alias(b),
+    )
+
+
+def _bfs_depths(dist, edges, hops: int = 4):
+    """Synchronous BFS over ``edges(a, b)`` from the ``depth`` 0 rows of
+    ``dist(..., node, depth)``, keyed by every column but ``depth``:
+    each round joins ONLY the newly reached frontier against the edge
+    list and re-minimizes, so settled vertices are never re-expanded."""
+    keys = [c for c in dist.columns if c != "depth"]
+    carried = [c for c in keys if c != "node"]
+    rounds = iter(range(1, hops + 1))
+
+    def expand(dist):
+        r = next(rounds)
+        frontier = dist.filter(F.col("depth") == r - 1)
+        nxt = frontier.join(edges, frontier.node == edges.a).select(
+            *carried, F.col("b").alias("node"), F.lit(r).alias("depth")
+        )
+        return dist.unionByName(nxt).groupBy(*keys).agg(F.min("depth").alias("depth"))
+
+    return fixpoint(dist, expand, hops)
+
 
 # --- word co-occurrence PMI --------------------------------------------------
 
@@ -291,18 +332,7 @@ def q_doc_graph_triangles(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    e0 = docs.crossJoin(F.broadcast(ncnt)).select(
-        F.col("node").alias("a"),
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                    for k in (1, 2, 3)
-                ]
-            )
-        ).alias("b"),
-    )
+    e0 = citation_edges(docs)
     # e feeds all three triangle-join roles — unpersisted, the edge
     # derivation (scan + explode + distinct exchange) re-ran once per
     # role (round-12 plan audit: 6 scans in this one plan). Edge-list
@@ -504,40 +534,11 @@ def q_doc_graph_bfs_depths(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    edges = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("a"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    dist = docs.filter(F.col("node") % 97 == 0).select(
+    edges = citation_edges(docs).filter(F.col("a") != F.col("b")).distinct()
+    seeds = docs.filter(F.col("node") % 97 == 0).select(
         "node", F.lit(0).alias("depth")
     )
-    for r in range(1, 5):
-        frontier = dist.filter(F.col("depth") == r - 1)
-        nxt = frontier.join(edges, frontier.node == edges.a).select(
-            F.col("b").alias("node"), F.lit(r).alias("depth")
-        )
-        dist = (
-            dist.unionByName(nxt)
-            .groupBy("node")
-            .agg(F.min("depth").alias("depth"))
-            # house iterative-loop convention: dist feeds BOTH next round's
-            # frontier filter and the union, so without a per-round
-            # checkpoint the logical plan doubles per round (~2^r)
-            .localCheckpoint(eager=False)
-        )
+    dist = _bfs_depths(seeds, edges)
     return dist.select(
         F.col("node").alias("doc_id"), F.col("depth").cast("bigint").alias("depth")
     )
@@ -600,18 +601,7 @@ def q_doc_graph_clustering_coeff(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    e0 = docs.crossJoin(F.broadcast(ncnt)).select(
-        F.col("node").alias("a"),
-        F.explode(
-            F.array(
-                *[
-                    F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                    for k in (1, 2, 3)
-                ]
-            )
-        ).alias("b"),
-    )
+    e0 = citation_edges(docs)
     # feeds degrees AND the two-hop triangle join; cache scoped to the
     # returned plan (freed when the caller drops the result)
     e = lifetime.persist(
@@ -984,21 +974,8 @@ FROM c2 GROUP BY 1
 )
 def q_doc_graph_wl_colors(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    e0 = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("doc_id").alias("a"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("doc_id") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
+    e0 = citation_edges(docs.select(F.col("doc_id").alias("node"))).filter(
+        F.col("a") != F.col("b")
     )
     eu = e0.select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
@@ -1009,21 +986,16 @@ def q_doc_graph_wl_colors(spark, sf_dir):
     deg = sym.groupBy(F.col("a").alias("v")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
-    # each WL round consumes colors TWICE (the neighbor-color stream and
-    # the refinement join) — unpersisted, the recompute doubled per round
-    # (round-12 plan audit). Node-sized frame, persisted per round.
-    colors = lifetime.persist(
-        docs.join(deg, docs["doc_id"] == deg["v"], "left")
-        .select(
-            F.col("doc_id").alias("v"),
-            F.coalesce(F.col("deg"), F.lit(0)).cast("string").alias("c"),
-        )
+    colors = docs.join(deg, docs["doc_id"] == deg["v"], "left").select(
+        F.col("doc_id").alias("v"),
+        F.coalesce(F.col("deg"), F.lit(0)).cast("string").alias("c"),
     )
-    for _ in range(2):
+
+    def refine(colors):
         nb = sym.join(
             colors.select(F.col("v").alias("b"), F.col("c").alias("nc")), "b"
         ).select(F.col("a").alias("v"), "nc")
-        colors = (
+        return (
             colors.join(nb, "v", "left")
             .groupBy("v", "c")
             .agg(
@@ -1038,7 +1010,8 @@ def q_doc_graph_wl_colors(spark, sf_dir):
                 ).alias("c"),
             )
         )
-        colors = lifetime.persist(colors)
+
+    colors = fixpoint(colors, refine, 2)
     return (
         colors.groupBy(F.col("c").alias("wl_color")).agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1097,39 +1070,12 @@ def q_doc_graph_neighborhood_function(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
+    edges = citation_edges(docs).filter(F.col("a") != F.col("b")).distinct()
+    dist = _bfs_depths(
+        docs.select(F.col("node").alias("src"), "node", F.lit(0).alias("depth")),
+        edges,
+    )
     ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    edges = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("a"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    dist = docs.select(
-        F.col("node").alias("src"), F.col("node"), F.lit(0).alias("depth")
-    )
-    for r in range(1, 5):
-        frontier = dist.filter(F.col("depth") == r - 1)
-        nxt = frontier.join(edges, frontier.node == edges.a).select(
-            "src", F.col("b").alias("node"), F.lit(r).alias("depth")
-        )
-        # localCheckpoint: the state frame re-embeds itself twice per round
-        # (frontier + union) — flatten so the plan stays linear in rounds,
-        # the doc_graph_hits / WL-refinement house pattern
-        dist = (
-            dist.unionByName(nxt)
-            .groupBy("src", "node")
-            .agg(F.min("depth").alias("depth"))
-        ).localCheckpoint(eager=False)
     radii = F.explode(F.sequence(F.lit(0), F.lit(4))).alias("radius")
     return (
         dist.select(radii, "depth")
@@ -1179,23 +1125,7 @@ def q_doc_graph_hyperball(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    edges = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("a"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    edges = citation_edges(docs).filter(F.col("a") != F.col("b")).distinct()
     # init registers: node's own hash -> (bucket j, rank rho); rho computed
     # from the low bit of the remaining 58 bits via w & -w (an exact power
     # of two -> log2 is float-exact), w == 0 capped at 59
@@ -1227,15 +1157,14 @@ def q_doc_graph_hyperball(spark, sf_dir):
         + zero64
         + ", (acc, x) -> zip_with(acc, x, (p, q) -> greatest(p, q)))"
     )
-    for _ in range(4):
+
+    def merge_successors(regs):
         inbound = regs.join(edges, regs.node == edges.b).select(
             F.col("a").alias("node"), "regs"
         )
-        regs = (
-            regs.unionByName(inbound)
-            .groupBy("node")
-            .agg(F.expr(emax).alias("regs"))
-        ).localCheckpoint(eager=False)
+        return regs.unionByName(inbound).groupBy("node").agg(F.expr(emax).alias("regs"))
+
+    regs = fixpoint(regs, merge_successors, 4)
     # per-vertex HLL estimate: raw = alpha_64 * m^2 / sum(2^-M); small-range
     # linear counting when raw <= 2.5m and empty registers remain
     est = regs.select(
@@ -1416,25 +1345,13 @@ def q_doc_graph_adamic_adar(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     # e feeds both adj union branches AND the final left-anti join, and adj
     # feeds deg plus both wedge sides — unpersisted, every consumer re-ran
     # the edge derivation from the raw scan (round-12 plan audit: 14
     # parquet scans of documents in this one plan). Both frames are
     # edge-list sized.
     e = lifetime.persist(
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("x"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("y"),
-        )
+        citation_edges(docs, "x", "y")
         .filter(F.col("x") != F.col("y"))
         .select(
             F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")

@@ -1545,7 +1545,7 @@ def q_embedding_dbscan_lite(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     pairs = embedding_near_dup_pairs(emb, threshold=0.42).select("d1", "d2")
-    pairs = pairs.persist()
+    pairs = lifetime.persist(pairs)
     adj = pairs.select(F.col("d1").alias("v"), F.col("d2").alias("nb")).unionByName(
         pairs.select(F.col("d2").alias("v"), F.col("d1").alias("nb"))
     )
@@ -1573,7 +1573,7 @@ def q_embedding_dbscan_lite(spark, sf_dir):
         .groupBy("v")
         .agg(F.min("nb_cluster").alias("cluster"))
     )
-    out = (
+    return (
         emb.select("vec_id")
         .join(allcore.withColumnRenamed("v", "vec_id").withColumnRenamed("cluster", "core_cluster"), "vec_id", "left")
         .join(border.withColumnRenamed("v", "vec_id").withColumnRenamed("cluster", "border_cluster"), "vec_id", "left")
@@ -1586,9 +1586,6 @@ def q_embedding_dbscan_lite(spark, sf_dir):
             F.coalesce("core_cluster", "border_cluster").alias("cluster"),
         )
     )
-    result = out.localCheckpoint(eager=True)
-    pairs.unpersist()
-    return result
 
 
 @register(
@@ -2862,6 +2859,43 @@ def _bpe_oracle(rounds: int = 3) -> str:
     return ",\n".join(cte) + "\n" + rows
 
 
+def _bpe_merge_round(v):
+    """One BPE merge round over a weighted vocabulary ``v`` (``sp`` = the
+    word's symbols, space-separated with a space on both ends; ``wn`` =
+    its weight; other columns ride along): count adjacent-symbol pairs,
+    pick the top pair under the tie-free order (n desc, pair asc), and
+    rewrite every word with a TWO-PASS boundary-anchored replace. Returns
+    the rewritten vocabulary and the one-row ``(pair, n, merged)`` frame
+    of the chosen merge."""
+    pairs = v.select(
+        F.expr("split(trim(sp), ' ')").alias("s"), "wn"
+    ).filter(F.size("s") >= 2).select(
+        F.explode(
+            F.expr(
+                "transform(sequence(0, size(s) - 2),"
+                " i -> concat(s[i], ' ', s[i+1]))"
+            )
+        ).alias("pair"),
+        "wn",
+    )
+    best = (
+        pairs.groupBy("pair")
+        .agg(F.sum("wn").cast("long").alias("n"))
+        .orderBy(F.col("n").desc(), F.col("pair").asc())
+        .limit(1)
+        .select("pair", "n", F.expr("replace(pair, ' ', '')").alias("merged"))
+    )
+    rewrite = F.expr(
+        "replace(replace(sp,"
+        " concat(' ', pair, ' '), concat(' ', merged, ' ')),"
+        " concat(' ', pair, ' '), concat(' ', merged, ' '))"
+    ).alias("sp")
+    merged = v.crossJoin(F.broadcast(best)).select(
+        *[rewrite if c == "sp" else c for c in v.columns]
+    )
+    return merged, best
+
+
 @register(
     "bpe_learn_merges",
     oracle=_bpe_oracle(3),
@@ -2894,38 +2928,9 @@ def q_bpe_learn_merges(spark, sf_dir):
     )
     out = None
     for r in range(1, 4):
-        pairs = v.select(
-            F.expr("split(trim(sp), ' ')").alias("s"), "wn"
-        ).filter(F.size("s") >= 2).select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(s) - 2),"
-                    " i -> concat(s[i], ' ', s[i+1]))"
-                )
-            ).alias("pair"),
-            "wn",
-        )
-        cnt = pairs.groupBy("pair").agg(F.sum("wn").cast("long").alias("n"))
-        best = (
-            cnt.orderBy(F.col("n").desc(), F.col("pair").asc())
-            .limit(1)
-            .select("pair", "n", F.expr("replace(pair, ' ', '')").alias("merged"))
-        )
-        v = v.crossJoin(F.broadcast(best)).select(
-            F.expr(
-                "replace(replace(sp,"
-                " concat(' ', pair, ' '), concat(' ', merged, ' ')),"
-                " concat(' ', pair, ' '), concat(' ', merged, ' '))"
-            ).alias("sp"),
-            "wn",
-        )
-        # flatten the per-round plan: v_r embeds v_{r-1} TWICE (once via
-        # best's argmax subtree, once directly in the rewrite), so without
-        # this the logical plan doubles per round — the same plan-explosion
-        # pattern doc_graph_hits checkpoints away (round-5 advisor
-        # finding). localCheckpoint (not persist) makes each round's
-        # vocabulary a leaf; the materialization is vocab-scale, not
-        # corpus-scale, so raising `rounds` stays linear.
+        v, best = _bpe_merge_round(v)
+        # v_r embeds v_{r-1} twice (best's argmax and the rewrite): a
+        # vocab-scale checkpoint keeps the plan linear (see rounds.py)
         v = v.localCheckpoint(eager=False)
         syms = v.agg(
             F.sum(
@@ -3043,33 +3048,7 @@ def q_bpe_encode_corpus(spark, sf_dir):
         "wn",
     )
     for _ in range(3):
-        pairs = v.select(
-            F.expr("split(trim(sp), ' ')").alias("s"), "wn"
-        ).filter(F.size("s") >= 2).select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(s) - 2),"
-                    " i -> concat(s[i], ' ', s[i+1]))"
-                )
-            ).alias("pair"),
-            "wn",
-        )
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("wn").cast("long").alias("n"))
-            .orderBy(F.col("n").desc(), F.col("pair").asc())
-            .limit(1)
-            .select("pair", F.expr("replace(pair, ' ', '')").alias("merged"))
-        )
-        v = v.crossJoin(F.broadcast(best)).select(
-            "word",
-            F.expr(
-                "replace(replace(sp,"
-                " concat(' ', pair, ' '), concat(' ', merged, ' ')),"
-                " concat(' ', pair, ' '), concat(' ', merged, ' '))"
-            ).alias("sp"),
-            "wn",
-        )
+        v = _bpe_merge_round(v)[0]
     tok = v.select(
         "word", F.size(F.expr("split(trim(sp), ' ')")).cast("long").alias("t")
     )

@@ -1264,9 +1264,10 @@ FROM lineitem
 """,
     description="EXACT global median by iterative histogram refinement "
     "(operators/quantiles.py): each pass histograms the surviving value "
-    "range into 1024 buckets, the driver sees ONLY the 1024 counts, "
-    "picks the bucket holding the target rank, and narrows — 3 passes "
-    "settle a 10^12-micro range, each one scan + tiny aggregate, no "
+    "ranges into 1024 buckets, the driver sees ONLY the counts, picks "
+    "the bucket holding each middle rank, and narrows — both middle "
+    "ranks in the same passes, 4 of which settle a 10^12-micro range, "
+    "each one scan + tiny aggregate, no "
     "global sort, no per-group value buffers (the failure modes of "
     "sort-based and percentile()-based medians at 100 TB; the sketch "
     "tier quantity_approx_percentiles trades exactness for ONE pass). "
@@ -1283,22 +1284,22 @@ def q_price_exact_median_histogram(spark, sf_dir):
 
     from mapreduce_paradigm_spark.operators.quantiles import kth_smallest_long
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 1e6, 0).cast("long").alias("p_micro")
+    # every refinement pass rescans li: read the column once
+    li = lifetime.persist(
+        load_table(spark, sf_dir, "lineitem").select(
+            F.round(F.col("l_extendedprice") * 1e6, 0).cast("long").alias("p_micro")
+        )
     )
-    li = li.persist()
     n = li.count()
     k1, k2 = (n + 1) // 2, n // 2 + 1
-    v1 = kth_smallest_long(li, "p_micro", k1)
-    v2 = v1 if k2 == k1 else kth_smallest_long(li, "p_micro", k2)
-    li.unpersist()
+    v = kth_smallest_long(li, "p_micro", {k1, k2})
     # (v1+v2)/2 in micros, rendered as exact decimal — micros are integers
     # so the midpoint is exact at half-micro precision; round to micro like
     # the oracle's quantile_cont output (integer inputs -> .0 or .5 -> the
     # round(x, 0) both engines share)
     # integer half-up (prices are positive): matches DuckDB round(x.5)=away
     # from zero, where Python round() would banker-round to even
-    mid_micro = (v1 + v2 + 1) // 2
+    mid_micro = (v[k1] + v[k2] + 1) // 2
     med = float(Decimal(mid_micro) / Decimal(1000000))
     return li.sparkSession.createDataFrame(
         [(n, med)], "n_rows LONG, median_price DOUBLE"
@@ -1443,9 +1444,9 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag
 """,
     description="Per-GROUP exact medians via simultaneous histogram "
-    "refinement (operators/quantiles.py grouped_kth_smallest_long): one "
-    "(group, bucket) histogram per pass narrows EVERY group's candidate "
-    "range at once — settled groups drop out of the scan filter; driver "
+    "refinement (operators/quantiles.py kth_smallest_long): one "
+    "(group, bucket) histogram per pass narrows BOTH middle ranks of "
+    "EVERY group at once — settled ranks drop out of the scan filter; driver "
     "state is O(groups), never group values. This is the scale path "
     "beside quantity_percentiles' percentile() (exact but buffers each "
     "group's values in executor memory — the thing that OOMs on a "
@@ -1459,31 +1460,26 @@ FROM lineitem GROUP BY l_returnflag
 def q_returnflag_exact_median_histogram(spark, sf_dir):
     from decimal import Decimal
 
-    from mapreduce_paradigm_spark.operators.quantiles import (
-        grouped_kth_smallest_long,
-    )
+    from mapreduce_paradigm_spark.operators.quantiles import kth_smallest_long
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 1e6, 0).cast("long").alias("p_micro"),
+    # every refinement pass rescans li: read the columns once
+    li = lifetime.persist(
+        load_table(spark, sf_dir, "lineitem").select(
+            F.col("l_returnflag").alias("flag"),
+            F.round(F.col("l_extendedprice") * 1e6, 0).cast("long").alias("p_micro"),
+        )
     )
-    li = li.persist()
     counts = {
         r["flag"]: r["n"]
         for r in li.groupBy("flag").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    k1 = {k: (n + 1) // 2 for k, n in counts.items()}
-    k2 = {k: n // 2 + 1 for k, n in counts.items()}
-    v1 = grouped_kth_smallest_long(li, "flag", "p_micro", k1)
-    need2 = {k: r for k, r in k2.items() if r != k1[k]}
-    v2 = dict(v1)
-    v2.update(grouped_kth_smallest_long(li, "flag", "p_micro", need2) if need2 else {})
-    li.unpersist()
+    mid = {k: ((n + 1) // 2, n // 2 + 1) for k, n in counts.items()}
+    v = kth_smallest_long(li, "p_micro", {k: set(m) for k, m in mid.items()}, "flag")
     rows = [
         (
             k,
             counts[k],
-            float(Decimal(v1[k] + v2[k]) / Decimal(2000000)),
+            float(Decimal(v[k][mid[k][0]] + v[k][mid[k][1]]) / Decimal(2000000)),
         )
         for k in sorted(counts)
     ]

@@ -13,11 +13,15 @@ drives Spark jobs from the Python driver but touches no data driver-side.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mapreduce_paradigm_spark import lifetime
 from mapreduce_paradigm_spark.functions import dsum
+from mapreduce_paradigm_spark.operators.rounds import fixpoint
+from mapreduce_paradigm_spark.queries.graphtext import citation_edges
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -414,15 +418,14 @@ def _pagerank_oracle() -> str:
     "classic MapReduce PageRank reshaped for DataFrames: contributions "
     "= edges⋈ranks grouped by dst, each round one shuffle on dst; "
     "edges are computed once and persisted; the driver never touches "
-    "row data (pure loop control). CAVEATS (r12 advisor): the per-round "
-    "eager localCheckpoint means (a) this builder is not side-effect-"
-    "free — explain/plan dumps execute the full iteration — and (b) "
+    "row data (pure loop control). CAVEATS: rounds run through "
+    "operators/rounds.py fixpoint's per-round localCheckpoint, so (a) "
+    "building the plan already runs each round's shuffle stages, and (b) "
     "checkpoint blocks are NON-REPLICATED executor state, so on a real "
     "cluster an executor loss makes the returned plan unrecoverable; "
-    "at 100 TB use reliable checkpoint() (or persist+count to HDFS-"
-    "backed storage) every few rounds instead, pre-partition edges and "
-    "ranks on the node key so every round's join is co-located — "
-    "exactly as the components operators here already do.",
+    "at 100 TB use reliable checkpoint() every few rounds instead and "
+    "pre-partition edges and ranks on the node key so every round's "
+    "join is co-located.",
     bench=True,  # round 13: bench addition (VERDICT r12 ask #1)
     tags=("graph", "iterative", "documents"),
 )
@@ -430,59 +433,25 @@ def q_doc_graph_pagerank(spark, sf_dir):
     # node list persisted: it feeds the count, the edge build, the rank
     # init and every round's left join — one pruned scan instead of one
     # per consumer (round-12 plan audit)
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("node"))
-        .persist()
+    docs = lifetime.persist(
+        load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
     )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    edges = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("src"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("dst"),
+    edges = lifetime.persist(citation_edges(docs, "src", "dst"))
+
+    def propagate(ranks):
+        contrib = (
+            edges.join(ranks, edges.src == ranks.node)
+            .groupBy("dst")
+            .agg(F.sum(F.expr("r DIV 3")).alias("s"))
         )
-        .persist()
-    )
+        return docs.join(contrib, docs.node == contrib.dst, "left").select(
+            "node",
+            F.expr("150000 + (850000 * coalesce(s, 0)) DIV 1000000").alias("r"),
+        )
+
     ranks = docs.select("node", F.lit(1000000).cast("long").alias("r"))
-    try:
-        for _ in range(_PR_ITER):
-            contrib = (
-                edges.join(ranks, edges.src == ranks.node)
-                .groupBy("dst")
-                .agg(F.sum(F.expr("r DIV 3")).alias("s"))
-            )
-            ranks = (
-                docs.join(contrib, docs.node == contrib.dst, "left")
-                .select(
-                    "node",
-                    F.expr(
-                        "150000 + (850000 * coalesce(s, 0)) DIV 1000000"
-                    ).alias("r"),
-                )
-                # eager per-round checkpoint (round 12) — the HITS/components
-                # loop contract this query's docstring already prescribes.
-                # The old fully-lazy nesting meant (a) the finally-block
-                # unpersist dropped the edges cache BEFORE the returned plan
-                # ever executed, so the persist never served a single read,
-                # and (b) each round's plan re-embedded docs and re-derived
-                # edges — 16 parquet scans of documents in the round-12
-                # before-plan. Checkpointing makes each round read the
-                # previous round's materialized blocks and the edges cache
-                # while it is actually alive; lineage stays O(1) per round.
-                .localCheckpoint(eager=True)
-            )
-        return ranks.select("node", F.col("r").alias("rank_ppm"))
-    finally:
-        edges.unpersist()
-        docs.unpersist()
+    ranks = fixpoint(ranks, propagate, _PR_ITER)
+    return ranks.select("node", F.col("r").alias("rank_ppm"))
 
 
 # --- HITS hubs/authorities (exact fixed-point, 5 rounds) ---------------------
@@ -557,73 +526,40 @@ def _hits_oracle() -> str:
     tags=("graph", "iterative", "documents"),
 )
 def q_doc_graph_hits(spark, sf_dir):
-    # node list persisted: it feeds the count, the edge build, the score
-    # init and every half-round's left join — one pruned scan instead of
-    # one per consumer (round-12 plan audit)
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select(F.col("doc_id").alias("node"))
-        .persist()
-    )
-    ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    edges = (
-        docs.crossJoin(F.broadcast(ncnt))
-        .select(
-            F.col("node").alias("src"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.col("node") * 31 + F.lit(k), F.col("n_docs"))
-                        for k in (1, 2, 3)
-                    ]
-                )
-            ).alias("dst"),
-        )
-        .persist()
-    )
+    docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
+    edges = lifetime.persist(citation_edges(docs, "src", "dst"))
 
-    def half_round(scores, score_col, group_key, out_key):
-        # one join + one grouped sum, then integer ppm normalization with
-        # the total riding a broadcast crossJoin (scalar-only, no collect)
-        raw = (
-            edges.join(scores, edges[group_key] == scores.node)
-            .groupBy(out_key)
-            .agg(F.sum(score_col).alias("s"))
-        )
-        raw = (
-            docs.join(raw, docs.node == raw[out_key], "left")
+    # half-rounds alternate: hubs -> authorities along src -> dst, then
+    # authorities -> hubs back along dst -> src
+    roles = itertools.cycle([("src", "dst"), ("dst", "src")])
+
+    def half_round(scores):
+        # scores (node, s[, prev]) -> (node, s', prev = s): one join + one
+        # grouped sum, then integer ppm normalization. The total is summed
+        # from the same join rows (Σ over nodes of Σ in-messages = Σ over
+        # messages), so the grouped sums feed nothing else and the total
+        # rides a broadcast crossJoin (scalar-only, no collect)
+        from_key, to_key = next(roles)
+        msgs = edges.join(scores, edges[from_key] == scores.node).select(to_key, "s")
+        sums = msgs.groupBy(to_key).agg(F.sum("s").alias("t"))
+        total = msgs.agg(F.sum("s").cast("long").alias("tot"))
+        return (
+            scores.join(sums, scores.node == sums[to_key], "left")
+            .crossJoin(F.broadcast(total))
             .select(
-                "node", F.coalesce("s", F.lit(0)).cast("long").alias("raw")
+                "node",
+                F.expr("(coalesce(t, 0) * 1000000) DIV tot").alias("s"),
+                F.col("s").alias("prev"),
             )
-            # raw feeds BOTH the normalization and its own Σ subtree; without
-            # flattening, each half-round embeds the prior plan twice and the
-            # logical tree doubles per half-round (2^10 by round 5 — Catalyst
-            # never finishes). One tiny (n_nodes-row) materialization per
-            # half-round keeps the plan linear — the components-loop contract.
-            .localCheckpoint(eager=True)
-        )
-        total = raw.agg(F.sum("raw").cast("long").alias("tot"))
-        return raw.crossJoin(F.broadcast(total)).select(
-            "node", F.expr("(raw * 1000000) DIV tot").alias(score_col)
         )
 
-    hubs = docs.select("node", F.lit(1000000).cast("long").alias("h"))
-    try:
-        for _ in range(_HITS_ITER):
-            auths = half_round(hubs, "h", "src", "dst").withColumnRenamed(
-                "h", "a"
-            )
-            hubs = half_round(auths, "a", "dst", "src").withColumnRenamed(
-                "a", "h"
-            )
-        return hubs.join(auths, "node").select(
-            "node",
-            F.col("h").alias("hub_ppm"),
-            F.col("a").alias("auth_ppm"),
-        )
-    finally:
-        edges.unpersist()
-        docs.unpersist()
+    hubs = docs.select("node", F.lit(1000000).cast("long").alias("s"))
+    # 2 half-rounds per round: the last one computes hubs from the
+    # authorities it carries along as prev
+    scores = fixpoint(hubs, half_round, 2 * _HITS_ITER)
+    return scores.select(
+        "node", F.col("s").alias("hub_ppm"), F.col("prev").alias("auth_ppm")
+    )
 
 
 # --- interval overlap join (campaign attribution) ----------------------------
@@ -1946,7 +1882,7 @@ def q_revenue_forecast_conformal_interval(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    monthly = (
+    monthly = lifetime.persist(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(
@@ -1954,7 +1890,6 @@ def q_revenue_forecast_conformal_interval(spark, sf_dir):
             F.date_trunc("month", "o_orderdate").alias("month"),
         )
         .agg(F.sum(F.round(F.col("o_totalprice") * 1e6, 0).cast("long")).alias("rev"))
-        .persist()
     )
     a, f_ = monthly.alias("a"), monthly.alias("f")
     resid = a.join(

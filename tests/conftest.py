@@ -25,6 +25,21 @@ def rerank_regime_claims(dim: int = 64) -> tuple[int, int]:
     return n_vec_max + 1, n_codes_max + 1
 
 
+def jobs_submitted(spark, fn) -> int:
+    """Spark jobs that ``fn()`` submits, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

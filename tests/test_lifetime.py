@@ -204,3 +204,34 @@ def test_reads_of_a_persisted_aggregate_are_coalesced(spark):
         )
 
     assert tasks_over_cached_aggregate() < n_shuffle
+
+
+@pytest.mark.parametrize(
+    "name", ["revenue_forecast_conformal_interval", "embedding_dbscan_lite"]
+)
+def test_builder_caches_go_with_its_result(spark, name):
+    """Three builds, each collected and dropped, leave no persisted RDD
+    behind: the builder's caches are released with its result, and the
+    loop checkpoints are reaped by the ContextCleaner."""
+    import time
+
+    from mapreduce_paradigm_spark.registry import all_specs
+
+    sc = spark.sparkContext
+    builder = all_specs()[name].builder
+
+    def persisted() -> set[int]:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    newest = sc.range(1)._jrdd.id()  # RDD ids only grow
+    for _ in range(3):
+        builder(spark, SF_CORRECT).collect()
+    deadline = time.monotonic() + 60
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()  # lets the ContextCleaner see dropped RDDs
+        left = {i for i in persisted() if i > newest}
+        if not left or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert not left, (name, sorted(left))

@@ -18,7 +18,7 @@ from mapreduce_paradigm_spark.sources.files import (
 )
 from mapreduce_paradigm_spark.sources.tables import load_table
 
-from .conftest import SF_CORRECT, SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE, jobs_submitted
 
 CUSTOMER_SCHEMA = (
     "c_custkey BIGINT, c_name STRING, c_nationkey BIGINT, c_acctbal DOUBLE, "
@@ -395,21 +395,6 @@ def test_events_ts_pinned_ntz_under_adversarial_conf(spark):
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", old)
 
 
-def _jobs_submitted(spark, fn) -> int:
-    """Spark jobs that ``fn()`` submits, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts post async
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_schema_memo_second_load_submits_no_job(spark):
     from mapreduce_paradigm_spark.sources import tables
 
@@ -417,9 +402,9 @@ def test_schema_memo_second_load_submits_no_job(spark):
         with tables._SCHEMAS_LOCK:
             tables._SCHEMAS.clear()
         loads = []
-        first = _jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
+        first = jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
         assert first >= 1, name  # the counter sees the inference job
-        again = _jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
+        again = jobs_submitted(spark, lambda: loads.append(load_table(spark, SF_SMOKE, name)))
         assert again == 0, name
         assert loads[0].schema == loads[1].schema
 
@@ -488,4 +473,4 @@ def test_revenue_by_region_builder_rebuild_submits_no_job(spark):
 
     build = all_specs()["revenue_by_region"].builder
     build(spark, SF_SMOKE)
-    assert _jobs_submitted(spark, lambda: build(spark, SF_SMOKE)) == 0
+    assert jobs_submitted(spark, lambda: build(spark, SF_SMOKE)) == 0
